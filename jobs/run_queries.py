@@ -40,7 +40,9 @@ def parse_args(argv=None):
     p.add_argument("--index-root", required=True)
     p.add_argument("--k", type=int, default=10)
     p.add_argument("--master", default=None)
-    p.add_argument("--score-partitions", type=int, default=1)
+    p.add_argument("--score-partitions", type=int, default=None,
+                   help="group mode only: doc-range splits per query"
+                        " (default 1)")
     p.add_argument("--mode", choices=["group", "scan"], default="group",
                    help="group: per-query WAND groups (selective batches);"
                         " scan: doc-range groups with queries shipped to"
@@ -56,6 +58,9 @@ def parse_args(argv=None):
 
 def main(argv=None) -> dict:
     args = parse_args(argv)
+    if args.mode == "scan" and args.score_partitions is not None:
+        print("warning: --mode scan ignores --score-partitions (scan mode"
+              " splits by doc range on its own)", file=sys.stderr)
 
     from sparkrec.datagen import gen_queries
     from sparkrec.operators.indexer import Index

@@ -195,3 +195,19 @@ def gen_queries(n_convs: int, base_seed: int = SEED) -> pd.DataFrame:
     long_terms = VOCAB[rng.choice(VOCAB_SIZE, size=60, p=_ZIPF_P)]
     add(" ".join(long_terms), 20)
     return pd.DataFrame(rows)
+
+
+def gen_point_queries(
+    n: int, base_seed: int = SEED, exclude=()
+) -> list[tuple[str, str]]:
+    """``n`` distinct seeded point queries of 1–3 Zipf-drawn terms, as
+    (query_id, text); texts in ``exclude`` are skipped."""
+    rng = np.random.default_rng(base_seed + 2)
+    seen, out = set(exclude), []
+    while len(out) < n:
+        draw = rng.choice(VOCAB_SIZE, size=int(rng.integers(1, 4)), p=_ZIPF_P)
+        text = " ".join(sorted(set(VOCAB[draw])))
+        if text not in seen:
+            seen.add(text)
+            out.append((f"p-{len(out):03d}", text))
+    return out

@@ -631,6 +631,41 @@ class _DriverLexicon:
         return float(self._idf[i]), int(self._bucket[i])
 
 
+class _DriverPostings:
+    """Driver-resident copy of the warmed posting blocks.
+
+    One pandas frame of (term, block_id, max_tf, min_dl, docs_enc,
+    tfs_enc, dls_enc) sorted by (term, block_id) — the blocks stay
+    varint-encoded, so the copy costs about the executor cache's bytes —
+    plus a term → (start, end) row-range dict. A query's blocks are the
+    ``iloc`` slices of its terms: no Spark job.
+    """
+
+    __slots__ = ("_frame", "_rows")
+
+    COLUMNS = ("term", "block_id", "max_tf", "min_dl",
+               "docs_enc", "tfs_enc", "dls_enc")
+
+    def __init__(self, frame: pd.DataFrame):
+        frame = frame.sort_values(["term", "block_id"], ignore_index=True)
+        terms = frame["term"].to_numpy(dtype=object)
+        starts = np.flatnonzero(
+            np.concatenate(([len(terms) > 0], terms[1:] != terms[:-1]))
+        )
+        ends = np.append(starts[1:], len(terms))
+        self._rows = {terms[s]: (int(s), int(e)) for s, e in zip(starts, ends)}
+        self._frame = frame
+
+    def __len__(self) -> int:
+        return len(self._frame)
+
+    def blocks(self, terms) -> pd.DataFrame:
+        """Every block of ``terms`` (terms without postings add none)."""
+        parts = [self._frame.iloc[slice(*self._rows[t])]
+                 for t in terms if t in self._rows]
+        return pd.concat(parts) if parts else self._frame.iloc[:0]
+
+
 @dataclass
 class Index:
     root: str
@@ -666,6 +701,9 @@ class Index:
     #: can never silently serve a query whose terms live outside it.
     _postings_buckets: frozenset | None = None
     _lexicon_map: _DriverLexicon | None = None
+    #: driver copy of exactly the rows of ``_postings_cached``; filled by
+    #: ``warm`` only, never on read
+    _driver_postings: _DriverPostings | None = None
 
     #: build the driver-resident lexicon only below this vocabulary size.
     #: The standard serving design keeps the lexicon in RAM (it is the
@@ -674,6 +712,15 @@ class Index:
     #: query paths fall back to the distributed lexicon lookup — nothing
     #: breaks, one extra Spark job per query.
     LEX_DRIVER_CACHE_MAX = 1_000_000
+
+    #: fill the driver-resident postings copy only below this many
+    #: encoded block bytes (docs_enc + tfs_enc + dls_enc). Measured on
+    #: the perfbench serve index, 0.65 MB of blocks (5.2k rows) raised
+    #: driver peak RSS by 3.9 MB — ~6× the encoded bytes, collect-time
+    #: transients included — so the cap bounds a fill near 0.4 GB on
+    #: the 8g driver. Above it, warm point queries take the pruned scan
+    #: of the executor cache — nothing breaks, one Spark job per query.
+    POST_DRIVER_CACHE_MAX_BYTES = 64 << 20
 
     def check_fresh(self) -> None:
         """Raise StaleIndexError if the on-disk index moved past this
@@ -702,6 +749,7 @@ class Index:
         self._postings_cached = None
         self._postings_buckets = None
         self._lexicon_map = None
+        self._driver_postings = None
         idx = Index.load(spark, self.root)
         if re_warm:
             idx.warm(
@@ -717,19 +765,32 @@ class Index:
             return self._postings_cached
         return read_table(spark, self.root, "postings")
 
-    def postings_for(self, spark: SparkSession, buckets) -> DataFrame:
-        """Postings source for a query touching only ``buckets``: the warm
-        cache when it covers them (full warm, or a subset warm that is a
-        superset of the query's buckets), else the base parquet scan —
-        whose term_bucket partition pruning makes the cold path cheap.
-        The caller still applies its own bucket/term filters; this only
-        picks the cheapest covering source."""
-        if self._postings_cached is not None and (
+    def _warm_covers(self, buckets) -> bool:
+        """Whether the warm postings cover a query touching ``buckets``:
+        a full warm, or a subset warm that is a superset of them."""
+        return self._postings_cached is not None and (
             self._postings_buckets is None
             or frozenset(buckets) <= self._postings_buckets
-        ):
+        )
+
+    def postings_for(self, spark: SparkSession, buckets) -> DataFrame:
+        """Postings source for a query touching only ``buckets``: the warm
+        cache when it covers them, else the base parquet scan — whose
+        term_bucket partition pruning makes the cold path cheap.
+        The caller still applies its own bucket/term filters; this only
+        picks the cheapest covering source."""
+        if self._warm_covers(buckets):
             return self._postings_cached
         return read_table(spark, self.root, "postings")
+
+    def driver_postings_for(self, buckets) -> _DriverPostings | None:
+        """The driver-resident blocks when ``warm`` filled them and they
+        cover ``buckets`` (the same rule as ``postings_for``: the copy
+        holds exactly the executor cache's rows); else None, and the
+        caller takes the pruned scan."""
+        if self._driver_postings is not None and self._warm_covers(buckets):
+            return self._driver_postings
+        return None
 
     def lexicon(self, spark: SparkSession) -> DataFrame:
         if self._lexicon_cached is not None:
@@ -745,7 +806,17 @@ class Index:
         (the partition-pruned subset scan) and leave the cold tail on
         parquet: queries whose terms all live in warmed buckets serve
         from memory, anything else transparently falls back to the pruned
-        cold scan (``postings_for``) with identical results."""
+        cold scan (``postings_for``) with identical results.
+
+        With ``postings=True`` the warmed blocks are also copied into the
+        driver (``_DriverPostings``) when their encoded bytes are below
+        ``POST_DRIVER_CACHE_MAX_BYTES``; the one job that pins the cache
+        also sums those bytes. ``bm25_query_topk_local`` then serves
+        covered queries with zero Spark jobs. Above the cap, for queries
+        outside a subset warm, and on ``postings=False`` handles, it takes
+        the pruned scan (one job). The copy is never filled on read; it
+        belongs to this handle's epoch, and ``refresh`` drops and refills
+        it with the executor cache."""
         lex = read_table(spark, self.root, "lexicon").cache()
         n_terms = lex.count()
         self._lexicon_cached = lex
@@ -761,11 +832,18 @@ class Index:
                     F.col("term_bucket").isin([int(x) for x in buckets])
                 )
             post = post.cache()
-            post.count()
+            enc_bytes = post.agg(F.sum(
+                F.length("docs_enc") + F.length("tfs_enc") + F.length("dls_enc")
+            )).collect()[0][0] or 0
             self._postings_cached = post
             self._postings_buckets = (
                 None if buckets is None else frozenset(int(x) for x in buckets)
             )
+            self._driver_postings = None
+            if enc_bytes < self.POST_DRIVER_CACHE_MAX_BYTES:
+                self._driver_postings = _DriverPostings(
+                    post.select(*_DriverPostings.COLUMNS).toPandas()
+                )
         return self
 
     def docs(self, spark: SparkSession) -> DataFrame:

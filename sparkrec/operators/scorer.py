@@ -35,6 +35,48 @@ from sparkrec.operators.codec import bm25_weight, decode_postings_many
 from sparkrec.operators.indexer import Index
 
 TOPK_SCHEMA = "query_id string, rank int, doc_id long, score double"
+_EMPTY = pd.DataFrame({"query_id": [], "rank": [], "doc_id": [], "score": []})
+
+
+def _accumulate_topk(
+    docs: np.ndarray,
+    w: np.ndarray,
+    k: int,
+    prev: tuple[np.ndarray, np.ndarray] | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-doc sums of the posting weights ``w`` merged with the ``prev``
+    (doc_ids, scores) candidates, trimmed to the top k (unordered).
+
+    Sums follow row order (stable sort by doc, then reduceat), so callers
+    that feed rows in the canonical term-major order get bit-identical
+    scores. The trim keeps every candidate tied with the k-th score, so
+    the final (score desc, doc_id asc) order stays exact across calls."""
+    srt = np.argsort(docs, kind="stable")
+    sd, sw = docs[srt], w[srt]
+    starts = np.flatnonzero(np.concatenate(([True], sd[1:] != sd[:-1])))
+    doc_ids, scores = sd[starts], np.add.reduceat(sw, starts)
+    if prev is not None:
+        doc_ids = np.concatenate((prev[0], doc_ids))
+        scores = np.concatenate((prev[1], scores))
+    if len(scores) > k:
+        thr = np.partition(-scores, k - 1)[k - 1]
+        keep = np.flatnonzero(-scores <= thr)
+        doc_ids, scores = doc_ids[keep], scores[keep]
+    return doc_ids, scores
+
+
+def _topk_frame(
+    qid: str, doc_ids: np.ndarray, scores: np.ndarray
+) -> pd.DataFrame:
+    """One query's ranked (query_id, rank, doc_id, score) rows."""
+    return pd.DataFrame(
+        {
+            "query_id": qid,
+            "rank": np.arange(1, len(doc_ids) + 1, dtype=np.int32),
+            "doc_id": doc_ids,
+            "score": scores,
+        }
+    )
 
 
 def wand_topk(
@@ -124,24 +166,9 @@ def wand_topk(
         flat_dl = np.concatenate(l_lists)
         w = bm25_weight(flat_tf, flat_dl, avgdl, k1, b)
         w *= np.repeat(factor[idx], lens)
-
-        # accumulate per doc: sort by doc then reduceat (deterministic order)
-        srt = np.argsort(flat_docs, kind="stable")
-        sd = flat_docs[srt]
-        sw = w[srt]
-        starts = np.flatnonzero(np.concatenate(([True], sd[1:] != sd[:-1])))
-        seg_doc_ids = sd[starts]
-        seg_scores = np.add.reduceat(sw, starts)
-
-        # merge into running top-k
-        top_docs = np.concatenate((top_docs, seg_doc_ids))
-        top_scores = np.concatenate((top_scores, seg_scores))
-        if len(top_scores) > k:
-            # trim to the top k (keeping score ties so the doc_id asc
-            # tie-break stays exact across segment boundaries)
-            keep_thresh = np.partition(-top_scores, k - 1)[k - 1]
-            keep = np.flatnonzero(-top_scores <= keep_thresh)
-            top_docs, top_scores = top_docs[keep], top_scores[keep]
+        top_docs, top_scores = _accumulate_topk(
+            flat_docs, w, k, (top_docs, top_scores)
+        )
         if len(top_scores) >= k:
             theta = -np.partition(-top_scores, k - 1)[k - 1]
 
@@ -154,11 +181,17 @@ def _query_term_rows(
     queries: list[tuple[str, str]], min_token_len: int, remove_numeric: bool
 ) -> list[tuple[str, str, int]]:
     """Driver-side tokenization of the (tiny) query set — the same clean
-    semantics as the corpus pipeline; no Spark job."""
+    semantics as the corpus pipeline; no Spark job. Every query path
+    starts here, so this is where a batch that repeats a query_id is
+    rejected: paths keyed by id would otherwise merge (group: sum twice)
+    or overwrite (local, scan) the repeated queries' terms."""
     from collections import Counter
 
     from sparkrec.functions.textprep import py_tokenize
 
+    dups = sorted(q for q, c in Counter(q for q, _ in queries).items() if c > 1)
+    if dups:
+        raise ValueError(f"duplicate query_id(s) in one batch: {dups[:5]}")
     rows: list[tuple[str, str, int]] = []
     for qid, qtext in queries:
         toks = py_tokenize(
@@ -204,45 +237,53 @@ def bm25_query_topk_local(
     remove_numeric: bool = True,
     max_blocks: int = 100_000,
 ) -> pd.DataFrame:
-    """Interactive single-digit-latency path: scatter-gather scoring.
-
-    The partition-pruned, term-filtered posting blocks are collected to
-    the driver and the SAME exact WAND kernel runs in-process — one Spark
-    job (the pruned scan), zero shuffles, no Python-worker round-trip.
+    """Interactive single-digit-latency path: the SAME exact WAND kernel
+    runs in-process on the driver over the query terms' posting blocks.
     Returns a pandas DataFrame (query_id, rank, doc_id, score), identical
     values to ``bm25_query_topk``.
 
+    Where the blocks come from:
+
+    - a handle warmed with postings whose driver copy covers the query's
+      term_buckets (``Index.warm``) serves them from driver memory — zero
+      Spark jobs;
+    - otherwise (``warm(postings=False)``, a cold handle, a bucket-subset
+      warm that misses the query's buckets, or an index above the driver
+      copy's byte cap) the partition-pruned, term-filtered blocks are
+      collected from a scan — one fetch job, zero shuffles (a scan that
+      misses the executor cache also pays Spark's parquet schema
+      inference).
+
     Right for interactive point queries whose terms' posting volume is
-    bounded (the common case — WAND needs block metadata + the blocks it
-    actually decodes). A query over extreme hot terms can exceed the
-    driver budget: above ``max_blocks`` fetched blocks this raises, and
-    the caller should use the distributed path. At the 10^12-turn tier a
-    serving layer would cache the hot blocks driver-side; here the cap
-    keeps the fallback honest.
+    bounded (WAND needs block metadata + the blocks it actually decodes).
+    Above ``max_blocks`` blocks this raises on either source, and the
+    caller should use the distributed path.
     """
     index.check_fresh()
     qrows = _query_term_rows(queries, min_token_len, remove_numeric)
-    cols = ["query_id", "rank", "doc_id", "score"]
-    empty = pd.DataFrame({c: [] for c in cols})
     terms = sorted({t for _, t, _ in qrows})
     if not terms:
-        return empty
+        return _EMPTY.copy()
 
     idf_map, buckets = _lex_lookup(spark, index, terms)
     if not idf_map:
-        return empty
+        return _EMPTY.copy()
 
-    blocks = (
-        index.postings_for(spark, buckets)
-        .filter(
-            F.col("term_bucket").isin(buckets)
-            & F.col("term").isin(sorted(idf_map))
+    resident = index.driver_postings_for(buckets)
+    if resident is not None:
+        blocks = resident.blocks(sorted(idf_map))
+    else:
+        blocks = (
+            index.postings_for(spark, buckets)
+            .filter(
+                F.col("term_bucket").isin(buckets)
+                & F.col("term").isin(sorted(idf_map))
+            )
+            .select("term", "block_id", "max_tf", "min_dl",
+                    "docs_enc", "tfs_enc", "dls_enc")
+            .limit(max_blocks + 1)
+            .toPandas()
         )
-        .select("term", "block_id", "max_tf", "min_dl",
-                "docs_enc", "tfs_enc", "dls_enc")
-        .limit(max_blocks + 1)
-        .toPandas()
-    )
     if len(blocks) > max_blocks:
         raise ValueError(
             f"query touches > {max_blocks} posting blocks — use the "
@@ -259,20 +300,10 @@ def bm25_query_topk_local(
         if not meta:
             continue
         qb = blocks[blocks["term"].isin(meta.keys())]
-        doc_ids, scores = wand_topk(
-            qb, meta, k, index.avgdl, index.k1, index.b
-        )
-        out.append(
-            pd.DataFrame(
-                {
-                    "query_id": qid,
-                    "rank": np.arange(1, len(doc_ids) + 1, dtype=np.int32),
-                    "doc_id": doc_ids,
-                    "score": scores,
-                }
-            )
-        )
-    return pd.concat(out, ignore_index=True) if out else empty
+        out.append(_topk_frame(
+            qid, *wand_topk(qb, meta, k, index.avgdl, index.k1, index.b)
+        ))
+    return pd.concat(out, ignore_index=True) if out else _EMPTY.copy()
 
 
 def _dedup_reps(
@@ -384,15 +415,7 @@ def bm25_query_topk(
         meta = {}
         for t, idf, qtf in zip(pdf["term"], pdf["idf"], pdf["qtf"]):
             meta[t] = (float(idf), int(qtf))
-        doc_ids, scores = wand_topk(pdf, meta, k, avgdl, k1, b)
-        return pd.DataFrame(
-            {
-                "query_id": qid,
-                "rank": np.arange(1, len(doc_ids) + 1, dtype=np.int32),
-                "doc_id": doc_ids,
-                "score": scores,
-            }
-        )
+        return _topk_frame(qid, *wand_topk(pdf, meta, k, avgdl, k1, b))
 
     if not n_score_partitions or n_score_partitions <= 1:
         result = joined.groupBy("query_id").applyInPandas(
@@ -533,40 +556,16 @@ def bm25_query_topk_scan(
             hit = [t for t in sorted(meta) if t in term_dw]
             if not hit:
                 continue
-            docs = np.concatenate([term_dw[t][0] for t in hit])
-            w = np.concatenate(
-                [term_dw[t][1] * (meta[t][0] * meta[t][1]) for t in hit]
+            doc_ids, scores = _accumulate_topk(
+                np.concatenate([term_dw[t][0] for t in hit]),
+                np.concatenate(
+                    [term_dw[t][1] * (meta[t][0] * meta[t][1]) for t in hit]
+                ),
+                k,
             )
-            srt = np.argsort(docs, kind="stable")
-            sd, sw = docs[srt], w[srt]
-            starts = np.flatnonzero(
-                np.concatenate(([True], sd[1:] != sd[:-1]))
-            )
-            doc_ids = sd[starts]
-            scores = np.add.reduceat(sw, starts)
-            if len(scores) > k:
-                thr = np.partition(-scores, k - 1)[k - 1]
-                keep = np.flatnonzero(-scores <= thr)
-                doc_ids, scores = doc_ids[keep], scores[keep]
             order = np.lexsort((doc_ids, -scores))[:k]
-            doc_ids, scores = doc_ids[order], scores[order]
-            out.append(
-                pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "rank": np.arange(
-                            1, len(doc_ids) + 1, dtype=np.int32
-                        ),
-                        "doc_id": doc_ids,
-                        "score": scores,
-                    }
-                )
-            )
-        if not out:
-            return pd.DataFrame(
-                {"query_id": [], "rank": [], "doc_id": [], "score": []}
-            )
-        return pd.concat(out, ignore_index=True)
+            out.append(_topk_frame(qid, doc_ids[order], scores[order]))
+        return pd.concat(out, ignore_index=True) if out else _EMPTY.copy()
 
     partial = ranged.groupBy("_range").applyInPandas(
         score_range, schema=TOPK_SCHEMA

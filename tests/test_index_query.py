@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -549,3 +550,65 @@ def test_twophase_matches_rows_bit_exact(spark, index, tmp_path_factory):
 def test_twophase_invalid_path_rejected():
     with pytest.raises(ValueError, match="postings_path"):
         IndexConfig(postings_path="three-phase")
+
+
+def test_duplicate_query_ids_rejected_on_every_path(spark, index):
+    """A batch that repeats a query_id is rejected before scoring. Left
+    through, the group path would sum the repeated terms twice (one
+    broadcast-join row per occurrence) while the local and scan paths
+    would keep only the last query's terms — three different answers."""
+    from sparkrec.operators.scorer import (
+        bm25_query_topk_local,
+        bm25_query_topk_scan,
+    )
+
+    dup = [("q1", "term0001"), ("q2", "term0007"), ("q1", "term0001")]
+    for path in (bm25_query_topk, bm25_query_topk_scan, bm25_query_topk_local):
+        with pytest.raises(ValueError, match="duplicate query_id"):
+            path(spark, index, dup, 5)
+
+
+def test_driver_postings_match_scan_path(spark, index_root, queries_pdf):
+    """warm() copies the warmed blocks into the driver; the local path
+    served from that copy returns exactly the answers of the pruned scan
+    (a postings=False handle) — same rows, ids and bit-equal scores — and
+    still enforces its block cap."""
+    from sparkrec.operators.scorer import bm25_query_topk_local
+
+    queries = list(zip(queries_pdf["query_id"], queries_pdf["query_text"]))
+    scan = Index.load(spark, index_root).warm(spark, postings=False)
+    resident = Index.load(spark, index_root).warm(spark)
+    try:
+        assert scan._driver_postings is None
+        assert len(resident._driver_postings) == resident._postings_cached.count()
+        want = bm25_query_topk_local(spark, scan, queries, 10)
+        got = bm25_query_topk_local(spark, resident, queries, 10)
+        assert len(want) > 0
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+        with pytest.raises(ValueError, match="posting blocks"):
+            bm25_query_topk_local(spark, resident, queries, 10, max_blocks=1)
+    finally:
+        resident._postings_cached.unpersist()
+        resident._lexicon_cached.unpersist()
+
+
+def test_driver_postings_byte_cap_fallback(spark, index_root, queries_pdf,
+                                           monkeypatch):
+    """At or above POST_DRIVER_CACHE_MAX_BYTES warm() pins the executor
+    cache but builds no driver copy, and the local path falls back to the
+    pruned scan with identical answers."""
+    from sparkrec.operators.scorer import bm25_query_topk_local
+
+    queries = list(zip(queries_pdf["query_id"], queries_pdf["query_text"]))[:6]
+    want = bm25_query_topk_local(spark, Index.load(spark, index_root), queries, 10)
+
+    monkeypatch.setattr(Index, "POST_DRIVER_CACHE_MAX_BYTES", 0)
+    idx = Index.load(spark, index_root).warm(spark)
+    try:
+        assert idx._postings_cached is not None
+        assert idx._driver_postings is None  # the fallback is really exercised
+        got = bm25_query_topk_local(spark, idx, queries, 10)
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+    finally:
+        idx._postings_cached.unpersist()
+        idx._lexicon_cached.unpersist()

@@ -334,22 +334,68 @@ def test_connector_phrase_mining_no_python_and_broadcast_rewrite(spark):
     assert "BroadcastHashJoin" in p2, "promoted table must broadcast"
 
 
-def test_point_query_local_path_runs_single_job_after_warm(spark, index):
-    """The interactive scatter-gather path with a warm lexicon map must
-    run exactly ONE Spark job per query (the pruned postings fetch) —
-    the lexicon lookup is served from the driver-resident map."""
+def _point_query_jobs(spark, index, text: str, group: str) -> list[list[str]]:
+    """Stage names of each Spark job one point query on the local path
+    runs, after an unprobed warm-up call (first use may JIT/pin things)."""
     from sparkrec.operators.scorer import bm25_query_topk_local
 
-    index.warm(spark)
-    assert index._lexicon_map, "warm() must build the driver lexicon map"
     sc = spark.sparkContext
-    # warm-up call (first use may JIT/pin things); then the probe
-    bm25_query_topk_local(spark, index, [("w", "term0001")], 3)
-    sc.setJobGroup("lexmap-probe", "single-job point query")
+    bm25_query_topk_local(spark, index, [("w", text)], 3)
+    sc.setJobGroup(group, group)
     try:
-        out = bm25_query_topk_local(spark, index, [("q", "term0001")], 3)
+        out = bm25_query_topk_local(spark, index, [("q", text)], 3)
     finally:
         sc.setJobGroup(None, None)
     assert len(out) > 0
-    ids = sc.statusTracker().getJobIdsForGroup("lexmap-probe")
-    assert len(ids) == 1, f"expected 1 job on the warm local path, got {ids}"
+    st = sc.statusTracker()
+    return [
+        [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+        for j in sorted(st.getJobIdsForGroup(group))
+    ]
+
+
+def _is_scan_fallback(jobs: list[list[str]]) -> bool:
+    """Exactly one job fetches postings (the pruned scan). A cold parquet
+    read may add one schema-inference job ("parquet at ...") that reads
+    no postings."""
+    fetch = [j for j in jobs if not all(n.startswith("parquet at") for n in j)]
+    return len(fetch) == 1 and len(jobs) <= 2
+
+
+def test_point_query_local_path_runs_no_job_after_warm(spark, index):
+    """After a full warm() the interactive path runs ZERO Spark jobs per
+    query: idf + bucket come from the driver-resident lexicon map and the
+    posting blocks from the driver-resident postings copy."""
+    index.warm(spark)
+    assert index._lexicon_map, "warm() must build the driver lexicon map"
+    assert index._driver_postings is not None, "warm() must fill the copy"
+    jobs = _point_query_jobs(spark, index, "term0001", "warm-probe")
+    assert jobs == [], f"expected no job on the warm local path, got {jobs}"
+
+
+def test_point_query_local_fallback_runs_single_scan(spark, index):
+    """Without a covering driver postings copy the point path is the
+    pruned scan — exactly one fetch job: on a handle warmed with
+    postings=False, and on a bucket-subset warm queried outside its
+    buckets (inside them it stays job-free)."""
+    lex_only = Index.load(spark, index.root).warm(spark, postings=False)
+    assert lex_only._driver_postings is None
+    jobs = _point_query_jobs(spark, lex_only, "term0001", "lex-only-probe")
+    assert _is_scan_fallback(jobs), jobs
+
+    hot = lex_only._lexicon_map["term0001"][1]
+    others = [b for b in range(4) if b != hot]
+    t_in = (
+        lex_only.lexicon(spark)
+        .filter(F.col("term_bucket").isin(others))
+        .orderBy("term").first()["term"]
+    )
+    subset = Index.load(spark, index.root).warm(spark, buckets=others)
+    try:
+        assert subset._driver_postings is not None
+        jobs = _point_query_jobs(spark, subset, "term0001", "subset-miss")
+        assert _is_scan_fallback(jobs), jobs
+        jobs = _point_query_jobs(spark, subset, t_in, "subset-hit")
+        assert jobs == [], f"expected no job inside the subset, got {jobs}"
+    finally:
+        subset._postings_cached.unpersist()

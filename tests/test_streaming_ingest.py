@@ -4,6 +4,7 @@ corpus; replays are skipped; partial-update batches are rejected."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from sparkrec.datagen import transcripts_df
@@ -112,6 +113,32 @@ def test_warm_handle_poisoned_by_merge(spark, tmp_path):
 
     build_index(spark, batch_a.unionByName(batch_b), full_root, CFG)
     assert _topk(spark, root, idx=fresh) == _topk(spark, full_root)
+
+
+def test_refresh_refills_driver_postings_after_merge(spark, tmp_path):
+    """The driver postings copy belongs to its handle's epoch: after a
+    merge, ``refresh()`` drops the old copy and refills one that serves
+    the merged state — the same answers, ids and bit-equal scores, as
+    the pruned scan on a cold handle at the new epoch."""
+    root = str(tmp_path / "idx")
+    build_index(spark, transcripts_df(spark, 40, conv_start=0), root, CFG)
+    idx = Index.load(spark, root).warm(spark)
+    old = idx._driver_postings
+    assert old is not None
+
+    merge_index_delta(spark, transcripts_df(spark, 30, conv_start=40), root, CFG)
+    fresh = idx.refresh(spark)
+    try:
+        assert idx._driver_postings is None
+        assert fresh._driver_postings is not None
+        assert len(fresh._driver_postings) > len(old)  # the delta's blocks
+        want = bm25_query_topk_local(spark, Index.load(spark, root), QUERIES, 10)
+        got = bm25_query_topk_local(spark, fresh, QUERIES, 10)
+        assert len(want) > 0
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+    finally:
+        fresh._postings_cached.unpersist()
+        fresh._lexicon_cached.unpersist()
 
 
 def test_merge_replay_skipped_and_partial_rejected(spark, tmp_path):

@@ -60,12 +60,16 @@ def main() -> None:
             "SERVING CONTRACT: this distributed path is BATCH-ONLY — its "
             "per-query latency is Spark job-scheduling overhead (two "
             "stages: pruned scan → grouped kernel), amortized away at "
-            "batch sizes but ~5× the interactive path on a single query. "
+            "batch sizes but many times the interactive path on a single "
+            "query. "
             "Interactive point queries are served by "
-            "`scorer.bm25_query_topk_local` (same exact kernel, "
-            "scatter-gather over the pruned scan, zero shuffles) with the "
-            "warm driver-resident lexicon map supplying idf+bucket lookups "
-            "job-free on both paths (indexer.Index.warm).",
+            "`scorer.bm25_query_topk_local` (same exact kernel, run on "
+            "the driver): after `Index.warm` with postings its blocks "
+            "come from the driver-resident postings copy with ZERO Spark "
+            "jobs; without a covering copy it collects the pruned scan "
+            "(one job, zero shuffles). The warm driver-resident lexicon "
+            "map supplies idf+bucket lookups job-free on both paths "
+            "(indexer.Index.warm).",
             plan(bm25_query_topk(spark, idx, [("q", "term0001 term0007")], 5)),
         ),
         (
