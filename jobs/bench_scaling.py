@@ -131,13 +131,13 @@ def run_single(cores: int, n_convs: int, root: str, trials: int = 2,
     t.unpersist(blocking=True)  # input cache is dead weight for queries
     idx = Index.load(spark, root)
     idx.warm(spark)
-    # Throughput workload: the fixture set tiled to 300 distinct query ids.
-    # NOTE (round 5): bm25_query_topk now dedups textually identical
-    # queries (one kernel per distinct term vector + broadcast fan-out),
-    # so this tiled workload exercises the dedup fast path — its q/s is
-    # NOT comparable to pre-dedup rounds (BENCH.md "Query-batch
-    # redundancy"). Build throughput, the north-rule headline, is
-    # unaffected. Parallelism comes from INTER-query distribution (the
+    # Throughput workload: the fixture set tiled 10×. bm25_query_topk
+    # dedups queries with the same post-tokenize term multiset (one
+    # kernel per distinct multiset + broadcast fan-out), so each tile
+    # appends its own rare corpus term (conversation ``rep``'s unique
+    # token): every query is distinct and q/s measures per-query
+    # scoring, not dedup fan-out. Records taken with identical tiles
+    # (round 5 and before) are not comparable. Parallelism comes from INTER-query distribution (the
     # groupBy query_id shuffle spreads queries across all cores);
     # n_score_partitions stays 1 — per-query posting volume at this sf is
     # far too small to amortize intra-query splitting (that mode is for
@@ -147,7 +147,7 @@ def run_single(cores: int, n_convs: int, root: str, trials: int = 2,
         for _, r in gen_queries(n_convs).iterrows()
     ]
     qset = [
-        (f"{qid}-t{rep}", qtext)
+        (f"{qid}-t{rep}", f"{qtext} uniq{rep:08d}")
         for rep in range(10)
         for qid, qtext in fixture
     ]

@@ -10,88 +10,32 @@ The scorer tolerates multi-row blocks exactly (ingest.py module notes),
 so compaction is pure plumbing: it NEVER changes query answers — tested
 bit-exact (ids AND scores) in tests/test_compaction.py.
 
-Plan shape: one shuffle keyed (term_bucket, term, block_id) with in-agg
-sort on doc_lo (append ranges are doc-id-disjoint, so concatenation in
-doc_lo order is globally sorted — no re-sort of decoded postings), then
-an Arrow-batched numpy decode→concat→re-encode pass, then a partition-by
-term_bucket rewrite. With an Iceberg catalog this would be a per-
-partition RewriteDataFiles action under snapshot isolation; the parquet
-fallback writes to a sibling directory and atomically renames, then
-bumps the index epoch — answers are unchanged but the underlying files
-moved, so handles with pinned postings caches must reload (the same
-poison-then-refresh handoff as a merge).
+Plan shape: compaction IS the build's block reduce — ``reduce_blocks``
+(operators/indexer.py) over the stored rows: one shuffle keyed (term,
+shard) with in-agg sort on (block_id, doc_lo), single-row blocks passed
+through, multi-row blocks decoded, concatenated (append ranges are
+doc-id-disjoint) and re-encoded in Arrow-batched numpy, then a
+partition-by term_bucket rewrite. The result is byte-identical to a
+rebuild over the merged docs table (tests/test_compaction.py). With an
+Iceberg catalog this would be a per-partition RewriteDataFiles action
+under snapshot isolation; the parquet fallback writes to a sibling
+directory and atomically renames, then bumps the index epoch — answers
+are unchanged but the underlying files moved, so handles with pinned
+postings caches must reload (the same poison-then-refresh handoff as a
+merge).
 """
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from sparkrec.operators.codec import decode_postings_many, encode_postings_many
-from sparkrec.operators.indexer import POSTINGS_SCHEMA
+from sparkrec.operators.indexer import reduce_blocks
 from sparkrec.sources.tables import bump_index_epoch, read_table
 
 
-def _merge_rows(batches):
-    """Arrow batches of (term, shard, block_id, rows:list<struct>) →
-    one merged POSTINGS_SCHEMA row per group, numpy-vectorized across
-    the batch like the build-time encode pass."""
-    for pdf in batches:
-        terms, shards, block_ids, tbuckets = [], [], [], []
-        doc_lists, tf_lists, dl_lists = [], [], []
-        for term, shard, block_id, tbucket, rows in zip(
-            pdf["term"], pdf["shard"], pdf["block_id"], pdf["term_bucket"],
-            pdf["rows"],
-        ):
-            # rows arrive sorted by doc_lo (array_sort in the agg) and
-            # hold doc-id-disjoint ranges — concat is already sorted
-            d, t, l = decode_postings_many(
-                [r["docs_enc"] for r in rows],
-                [r["tfs_enc"] for r in rows],
-                [r["dls_enc"] for r in rows],
-            )
-            terms.append(term)
-            shards.append(shard)
-            block_ids.append(block_id)
-            tbuckets.append(tbucket)
-            doc_lists.append(np.concatenate(d))
-            tf_lists.append(np.concatenate(t))
-            dl_lists.append(np.concatenate(l))
-        if not terms:
-            continue
-        docs_enc, tfs_enc, dls_enc = encode_postings_many(
-            doc_lists, tf_lists, dl_lists
-        )
-        lens = np.array([len(x) for x in doc_lists])
-        starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        flat_tf = np.concatenate(tf_lists)
-        flat_dl = np.concatenate(dl_lists)
-        yield pd.DataFrame(
-            {
-                "term": terms,
-                "shard": np.asarray(shards, dtype=np.int32),
-                "block_id": np.asarray(block_ids, dtype=np.int64),
-                "n": lens.astype(np.int32),
-                "doc_lo": np.array([int(x[0]) for x in doc_lists], dtype=np.int64),
-                "doc_hi": np.array([int(x[-1]) for x in doc_lists], dtype=np.int64),
-                "max_tf": np.maximum.reduceat(flat_tf, starts).astype(np.int32),
-                "min_dl": np.minimum.reduceat(flat_dl, starts).astype(np.int32),
-                "docs_enc": docs_enc,
-                "tfs_enc": tfs_enc,
-                "dls_enc": dls_enc,
-                "term_bucket": np.asarray(tbuckets, dtype=np.int32),
-            }
-        )
-
-
-def compact_postings(
-    spark: SparkSession, index_root: str, n_term_buckets: int | None = None
-) -> dict:
+def compact_postings(spark: SparkSession, index_root: str) -> dict:
     """Rewrite the postings table with one row per (term, block_id).
 
     Returns {files_before, files_after, rows_before, rows_after,
@@ -110,24 +54,9 @@ def compact_postings(
     post = read_table(spark, index_root, "postings")
     rows_before = post.count()
 
-    grouped = (
-        post.groupBy("term_bucket", "term", "block_id")
-        .agg(
-            F.min("shard").alias("shard"),
-            F.array_sort(
-                F.collect_list(
-                    F.struct("doc_lo", "docs_enc", "tfs_enc", "dls_enc")
-                )
-            ).alias("rows"),
-        )
-        .select("term_bucket", "term", "shard", "block_id", "rows")
-    )
-    compacted = grouped.select(
-        "term", "shard", "block_id", "rows", "term_bucket"
-    ).mapInPandas(
-        lambda it: _merge_rows(it),
-        schema=POSTINGS_SCHEMA + ", term_bucket int",
-    )
+    # every stored row is a partial of its block: the build/merge reducer
+    # joins them, keeping each row's stored term_bucket
+    compacted = reduce_blocks(post)
 
     tmp = path + "__compact"
     (

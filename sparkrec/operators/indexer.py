@@ -28,16 +28,18 @@ Scale design (SURVEY.md §4.2):
   down into the parquet/Iceberg scan.
 - Encoding runs in ``mapInPandas`` with the batched numpy codec — one
   vectorized call per Arrow batch, not per posting (operators/codec.py).
-- **Two-phase assembly** (§4.2.1, the default): TF is counted in-row and
-  partial blocks are varint-encoded map-side, so the single corpus
-  exchange carries ~5 B/posting of compressed bytes instead of raw
-  struct rows over two exchanges (``encode_postings_twophase``); the
-  reduce merges split blocks with a canonical re-encode, keeping table
-  content bit-identical to the rows path.
+- **Two-phase assembly** (§4.2.1): TF is counted in-row and partial
+  blocks are varint-encoded map-side (``partial_blocks``), so the single
+  corpus exchange carries ~5 B/posting of compressed bytes. One reducer
+  (``reduce_blocks``) merges split blocks with a canonical re-encode
+  (``_blocks_frame``, the only builder of block rows); the full build,
+  the streaming delta merge and compaction all write through it, so a
+  table's bytes do not depend on which of them produced it.
 """
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
 
 import numpy as np
@@ -47,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkrec import BM25_B, BM25_K1
-from sparkrec.operators.bm25 import term_freqs, tokenize_docs
+from sparkrec.operators.bm25 import tokenize_docs
 from sparkrec.operators.codec import decode_postings_many, encode_postings_many
 from sparkrec.operators.docs import assemble_docs, assign_doc_ids
 from sparkrec.sources.tables import (
@@ -83,7 +85,7 @@ class IndexConfig:
     # max postings per assembly group — a HARD cap by construction ONLY
     # when docs_per_shard >= block_range (validated in __post_init__):
     # the shard is the doc-id block group, which spans at most
-    # max(1, docs_per_shard // block_range) blocks (encode_postings
+    # max(1, docs_per_shard // block_range) blocks (partial_blocks
     # docstring), so a smaller docs_per_shard would silently bound at
     # block_range instead.
     # Sized for task balance, not memory:
@@ -100,21 +102,8 @@ class IndexConfig:
     # content-neutral but not byte-neutral change.
     docs_per_shard: int = 16384
     n_term_buckets: int = 16       # postings partition count (↑ on clusters)
-    # postings assembly strategy (SURVEY §4.2.1). "twophase": TF counted
-    # AND blocks pre-encoded map-side, the ONE corpus exchange carries
-    # varint bytes (~5 B/posting), reduce merges partial blocks —
-    # canonical re-encode makes output bytes identical to "rows".
-    # "rows": explode→TF agg→groupBy(term, shard) with raw struct rows
-    # crossing two corpus exchanges (~40 B/posting) — the round-1..4
-    # layout, kept for A/B and as the no-Python-in-build fallback.
-    postings_path: str = "twophase"
 
     def __post_init__(self):
-        if self.postings_path not in ("twophase", "rows"):
-            raise ValueError(
-                f"postings_path must be 'twophase' or 'rows', "
-                f"got {self.postings_path!r}"
-            )
         if self.docs_per_shard < self.block_range:
             raise ValueError(
                 f"docs_per_shard ({self.docs_per_shard}) must be >= "
@@ -124,139 +113,68 @@ class IndexConfig:
             )
 
 
-def encode_postings(
-    tf: DataFrame, n_docs: int, avgdl: float, cfg: IndexConfig
-) -> DataFrame:
-    """(doc_id, term, tf, doc_len) → encoded block rows.
+def _term_bucket(cfg: IndexConfig):
+    """The postings/lexicon partition column: pmod(xxhash64(term), n)."""
+    return F.pmod(F.xxhash64("term"), F.lit(cfg.n_term_buckets)).cast("int")
 
-    One shuffle: groupBy (term, shard) with in-agg sort; then a
-    mapInPandas encode pass that is numpy-vectorized across every block
-    in the Arrow batch.
+
+def _blocks_frame(head: pd.DataFrame, doc_lists, tf_lists, dl_lists) -> pd.DataFrame:
+    """The one builder of POSTINGS_SCHEMA rows from posting lists.
+
+    ``head`` holds one row of key columns per block (term, shard,
+    block_id, plus any carried column); the lists hold that block's
+    doc-sorted (doc_id, tf, doc_len) arrays. One batched encode, then the
+    block metadata reductions. The codec is a deterministic function of
+    the sorted content, so equal lists give equal bytes: the canonical
+    block form every writer (build, delta merge, compaction) shares.
+    """
+    docs_enc, tfs_enc, dls_enc = encode_postings_many(doc_lists, tf_lists, dl_lists)
+    lens = np.fromiter(map(len, doc_lists), dtype=np.int64, count=len(doc_lists))
+    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    flat_doc = np.concatenate(doc_lists).astype(np.int64)
+    flat_tf = np.concatenate(tf_lists)
+    flat_dl = np.concatenate(dl_lists)
+    return head.reset_index(drop=True).assign(
+        n=lens.astype(np.int32),
+        doc_lo=flat_doc[starts],
+        doc_hi=flat_doc[starts + lens - 1],
+        max_tf=np.maximum.reduceat(flat_tf, starts).astype(np.int32),
+        # (max_tf, min_dl) make the block upper bound recomputable at
+        # query time under the CURRENT avgdl: bm25_weight is ↑ in tf and
+        # ↓ in dl, so f(max_tf, min_dl, avgdl_now) ≥ f(tf_i, dl_i,
+        # avgdl_now) for every posting — the WAND bound stays safe after
+        # incremental merges shift corpus stats (streaming/ingest.py). A
+        # build-time max_weight would bake the old avgdl in, so none is
+        # stored.
+        min_dl=np.minimum.reduceat(flat_dl, starts).astype(np.int32),
+        docs_enc=docs_enc,
+        tfs_enc=tfs_enc,
+        dls_enc=dls_enc,
+    )
+
+
+def partial_blocks(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """docs (doc_id, doc_len, tokens, …) → partial posting blocks, map-only
+    (phase 1 of the SURVEY §4.2.1 two-phase layout).
+
+    TF needs no cross-row aggregation — a doc's tokens live entirely in
+    its own row — so each Arrow batch counts TF in-row with a factorize +
+    lexsort run-length kernel (int codes, not interpreted HOF lambdas —
+    the 1.6×-slower per-element HOF variant in BENCH.md "tried and
+    rejected" is a different animal), cuts the batch's posting lists at
+    ``block_range`` doc-id boundaries, and varint-encodes them at once.
+    A block whose docs span several map batches leaves one partial per
+    batch; ``reduce_blocks`` joins them.
 
     The shard is the doc-id block GROUP (``doc_id // block_range //
     blocks_per_group``) — a pure function of doc_id, needing no term
-    statistics. Per-group state is hard-capped at ``docs_per_shard``
-    postings by construction (a group spans at most ``blocks_per_group``
-    blocks of ``block_range`` doc ids), so the Zipf head cannot pin a
-    task no matter how hot the term; and because the value is
-    df-independent, a streaming merge (ingest.py) assigns appended
-    blocks the exact shard a from-scratch rebuild would. Cutting the
-    old df-aware salting removed the build's second corpus-sized pass:
-    df is now aggregated from the block rows AFTER assembly
-    (build_index_from_docs), not joined in before it.
-    """
-    blocks_per_group = max(1, cfg.docs_per_shard // cfg.block_range)
-    g = (F.col("doc_id") / F.lit(cfg.block_range)).cast("long")
-    shard = (g / F.lit(blocks_per_group)).cast("long").cast("int")
-
-    grouped = (
-        tf.withColumn("shard", shard)
-        .groupBy("term", "shard")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("doc_id", "tf", "doc_len"))
-            ).alias("plist")
-        )
-        .select(
-            "term",
-            "shard",
-            F.transform("plist", lambda x: x["doc_id"]).alias("doc_ids"),
-            F.transform("plist", lambda x: x["tf"].cast("long")).alias("tfs"),
-            F.transform("plist", lambda x: x["doc_len"].cast("long")).alias("dls"),
-        )
-    )
-
-    block_range, k1, b = cfg.block_range, cfg.k1, cfg.b
-
-    def encode(batches):
-        for pdf in batches:
-            terms, shards, block_ids = [], [], []
-            doc_lists, tf_lists, dl_lists = [], [], []
-            for term, sh, ids, tfs, dls in zip(
-                pdf["term"], pdf["shard"], pdf["doc_ids"], pdf["tfs"], pdf["dls"]
-            ):
-                ids = np.asarray(ids, dtype=np.int64)
-                tfs = np.asarray(tfs, dtype=np.int64)
-                dls = np.asarray(dls, dtype=np.int64)
-                gids = ids // block_range
-                # split at block boundaries (ids sorted ⇒ gids sorted)
-                cut = np.flatnonzero(np.diff(gids)) + 1
-                for lo, hi in zip(
-                    np.concatenate(([0], cut)), np.concatenate((cut, [len(ids)]))
-                ):
-                    terms.append(term)
-                    shards.append(sh)
-                    block_ids.append(int(gids[lo]))
-                    doc_lists.append(ids[lo:hi].astype(np.uint64))
-                    tf_lists.append(tfs[lo:hi].astype(np.uint64))
-                    dl_lists.append(dls[lo:hi].astype(np.uint64))
-            if not terms:
-                continue
-            docs_enc, tfs_enc, dls_enc = encode_postings_many(
-                doc_lists, tf_lists, dl_lists
-            )
-            flat_tf = np.concatenate(tf_lists)
-            flat_dl = np.concatenate(dl_lists)
-            lens = np.array([len(x) for x in doc_lists])
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            max_tf = np.maximum.reduceat(flat_tf, starts)
-            # (max_tf, min_dl) make the block upper bound recomputable at
-            # query time under the CURRENT avgdl: bm25_weight is ↑ in tf
-            # and ↓ in dl, so f(max_tf, min_dl, avgdl_now) ≥
-            # f(tf_i, dl_i, avgdl_now) for every posting — the WAND bound
-            # stays safe after incremental merges shift corpus stats
-            # (streaming/ingest.py). A build-time max_weight would bake the
-            # old avgdl in, so none is stored.
-            min_dl = np.minimum.reduceat(flat_dl, starts)
-            yield pd.DataFrame(
-                {
-                    "term": terms,
-                    "shard": np.asarray(shards, dtype=np.int32),
-                    "block_id": np.asarray(block_ids, dtype=np.int64),
-                    "n": lens.astype(np.int32),
-                    "doc_lo": np.array([int(x[0]) for x in doc_lists], dtype=np.int64),
-                    "doc_hi": np.array([int(x[-1]) for x in doc_lists], dtype=np.int64),
-                    "max_tf": max_tf.astype(np.int32),
-                    "min_dl": min_dl.astype(np.int32),
-                    "docs_enc": docs_enc,
-                    "tfs_enc": tfs_enc,
-                    "dls_enc": dls_enc,
-                }
-            )
-
-    return grouped.mapInPandas(encode, schema=POSTINGS_SCHEMA)
-
-
-def encode_postings_twophase(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """docs (doc_id, doc_len, tokens, …) → encoded block rows via the
-    SURVEY §4.2.1 two-phase layout.
-
-    **Phase 1 (map-only).** TF needs no cross-row aggregation — a doc's
-    tokens live entirely in its own row — so the rows path's explode →
-    groupBy(doc_id, term) corpus exchange is pure waste. Here each Arrow
-    batch counts TF in-row with a factorize + lexsort run-length kernel
-    (int codes, not interpreted HOF lambdas — the 1.6×-slower per-element
-    HOF variant in BENCH.md "tried and rejected" is a different animal),
-    cuts partial posting lists at the SAME ``block_range`` boundaries as
-    the rows path, and varint-encodes them immediately. Partial rows use
-    POSTINGS_SCHEMA verbatim.
-
-    **Phase 2 (the one exchange).** Partials shuffle on (term, shard)
-    carrying ~5 B/posting of varint bytes instead of ~40 B/posting of raw
-    (doc_id, tf, doc_len) structs over TWO corpus exchanges. Per-group
-    reduce state stays hard-capped: ≤ docs_per_shard postings, now in
-    encoded form. Blocks wholly inside one map batch pass through
-    untouched (their bytes are already the canonical encode of the full
-    sorted list); blocks split across batches are decoded, merge-sorted
-    by doc_id, and re-encoded. The codec is a deterministic function of
-    the sorted content, so the output table is CONTENT-IDENTICAL to the
-    rows path — including the binary columns (tests/test_indexer.py
-    asserts full-table equality, and streaming merges built on the rows
-    path stay bit-compatible).
-
-    Shard/block assignment matches encode_postings exactly: shard =
-    (doc_id // block_range) // blocks_per_group, nonnegative ids, so
-    int64 floor division here equals Spark's double-divide-then-cast.
+    statistics. A group spans at most ``blocks_per_group`` blocks of
+    ``block_range`` doc ids, so per-group reduce state is hard-capped at
+    ``docs_per_shard`` postings no matter how hot the term; and because
+    the value is df-independent, a streaming merge (ingest.py) assigns
+    appended blocks the exact shard a from-scratch rebuild would. df is
+    aggregated from the block rows after assembly (build_index_from_docs),
+    not joined in before it.
     """
     blocks_per_group = max(1, cfg.docs_per_shard // cfg.block_range)
     block_range = cfg.block_range
@@ -306,148 +224,134 @@ def encode_postings_twophase(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
                 + 1
             )
             starts = np.concatenate(([0], cut))
-            ends = np.concatenate((cut, [len(g_code)]))
-            doc_lists = [
-                g_docid[s:e].astype(np.uint64) for s, e in zip(starts, ends)
-            ]
-            tf_lists = [g_tf[s:e].astype(np.uint64) for s, e in zip(starts, ends)]
-            dl_lists = [g_dl[s:e].astype(np.uint64) for s, e in zip(starts, ends)]
-            docs_enc, tfs_enc, dls_enc = encode_postings_many(
-                doc_lists, tf_lists, dl_lists
-            )
+            spans = list(zip(starts, np.append(cut, len(g_code))))
             block_ids = g_block[starts]
-            yield pd.DataFrame(
-                {
-                    "term": uniques[g_code[starts]],
-                    "shard": (block_ids // blocks_per_group).astype(np.int32),
-                    "block_id": block_ids.astype(np.int64),
-                    "n": (ends - starts).astype(np.int32),
-                    "doc_lo": g_docid[starts].astype(np.int64),
-                    "doc_hi": g_docid[ends - 1].astype(np.int64),
-                    "max_tf": np.maximum.reduceat(g_tf, starts).astype(np.int32),
-                    "min_dl": np.minimum.reduceat(g_dl, starts).astype(np.int32),
-                    "docs_enc": docs_enc,
-                    "tfs_enc": tfs_enc,
-                    "dls_enc": dls_enc,
-                }
+            head = pd.DataFrame({
+                "term": uniques[g_code[starts]],
+                "shard": (block_ids // blocks_per_group).astype(np.int32),
+                "block_id": block_ids,
+            })
+            yield _blocks_frame(
+                head,
+                [g_docid[s:e] for s, e in spans],
+                [g_tf[s:e] for s, e in spans],
+                [g_dl[s:e] for s, e in spans],
             )
 
-    partials = docs.select("doc_id", "doc_len", "tokens").mapInPandas(
+    return docs.select("doc_id", "doc_len", "tokens").mapInPandas(
         partial_encode, schema=POSTINGS_SCHEMA
     )
 
-    # the ONE corpus exchange: encoded partials keyed (term, shard).
+
+_BLOCK_COLUMNS = [f.split()[0] for f in POSTINGS_SCHEMA.split(", ")]
+# per-partial fields in reduce sort order: (block_id, doc_lo) leads
+_PART_FIELDS = ("block_id", "doc_lo", "doc_hi", "n", "max_tf", "min_dl",
+                "docs_enc", "tfs_enc", "dls_enc")
+
+
+def reduce_blocks(parts: DataFrame) -> DataFrame:
+    """Partial block rows → one canonical row per (term, block_id): the
+    single block reducer behind the full build, the delta merge and
+    compaction (phase 2 of SURVEY §4.2.1).
+
+    ``parts`` has POSTINGS_SCHEMA columns, optionally plus
+    ``term_bucket`` — a function of the term, carried through unchanged
+    (compaction keeps each row's stored bucket). The one exchange is
+    keyed (term, shard) and carries encoded bytes (~5 B/posting); group
+    state is hard-capped at ``docs_per_shard`` postings, in encoded form.
+    Blocks with a single partial pass through untouched (their bytes
+    already are the canonical encode of the full sorted list); blocks
+    with several are decoded, merge-sorted by doc_id and re-encoded by
+    ``_blocks_frame``. So a table's bytes do not depend on how its
+    postings were split into partials — map batching, delta appends or
+    compaction order (tests/test_index_query.py and
+    tests/test_streaming_ingest.py assert full-table equality).
+    """
+    carry = ["term_bucket"] if "term_bucket" in parts.columns else []
+    keys = ["term", "shard", *carry]
+    cols = [*_BLOCK_COLUMNS, *carry]
     # struct sorts by field order, so (block_id, doc_lo) leads — within a
     # group, partials arrive block-grouped and doc_lo-ordered. (block_id,
-    # doc_lo) is unique per group: a (doc, term) pair lands in exactly
-    # one map batch, so two partials of one block can't share doc_lo.
-    grouped = partials.groupBy("term", "shard").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "block_id", "doc_lo", "doc_hi", "n", "max_tf", "min_dl",
-                    "docs_enc", "tfs_enc", "dls_enc",
-                )
-            )
-        ).alias("parts")
+    # doc_lo) is unique per group: a (doc, term) posting lives in exactly
+    # one partial, so two partials of one block can't share doc_lo.
+    grouped = parts.groupBy("term", "shard").agg(
+        *[F.min(c).alias(c) for c in carry],
+        F.array_sort(F.collect_list(F.struct(*_PART_FIELDS))).alias("parts"),
     )
 
     def merge(batches):
         for pdf in batches:
-            o_term, o_shard, o_block = [], [], []
-            o_n, o_lo, o_hi, o_mtf, o_mdl = [], [], [], [], []
-            o_de, o_te, o_le = [], [], []
-            m_term, m_shard, m_block = [], [], []
-            m_d, m_t, m_l = [], [], []  # per split block: list of blobs
-            for term, shard, parts in zip(
-                pdf["term"], pdf["shard"], pdf["parts"]
-            ):
-                i, n_parts = 0, len(parts)
-                while i < n_parts:
-                    bid = parts[i]["block_id"]
-                    j = i + 1
-                    while j < n_parts and parts[j]["block_id"] == bid:
-                        j += 1
-                    if j == i + 1:
-                        # unsplit block: already the canonical encode
-                        p = parts[i]
-                        o_term.append(term)
-                        o_shard.append(shard)
-                        o_block.append(bid)
-                        o_n.append(p["n"])
-                        o_lo.append(p["doc_lo"])
-                        o_hi.append(p["doc_hi"])
-                        o_mtf.append(p["max_tf"])
-                        o_mdl.append(p["min_dl"])
-                        o_de.append(p["docs_enc"])
-                        o_te.append(p["tfs_enc"])
-                        o_le.append(p["dls_enc"])
-                    else:
-                        m_term.append(term)
-                        m_shard.append(shard)
-                        m_block.append(bid)
-                        m_d.append([parts[k]["docs_enc"] for k in range(i, j)])
-                        m_t.append([parts[k]["tfs_enc"] for k in range(i, j)])
-                        m_l.append([parts[k]["dls_enc"] for k in range(i, j)])
-                    i = j
-            if m_term:
-                dd, tt, ll = decode_postings_many(
-                    [b for grp in m_d for b in grp],
-                    [b for grp in m_t for b in grp],
-                    [b for grp in m_l for b in grp],
-                )
-                doc_lists, tf_lists, dl_lists = [], [], []
-                idx = 0
-                for grp in m_d:
-                    k = len(grp)
-                    d = np.concatenate(dd[idx : idx + k])
-                    t = np.concatenate(tt[idx : idx + k])
-                    dl = np.concatenate(ll[idx : idx + k])
-                    # map batches are arbitrary row ranges: doc ranges of
-                    # partials may interleave — merge-sort when needed
-                    # ((doc, term) is unique, so no tie order to worry)
-                    if len(d) > 1 and not np.all(d[1:] > d[:-1]):
-                        o = np.argsort(d, kind="stable")
-                        d, t, dl = d[o], t[o], dl[o]
-                    doc_lists.append(d)
-                    tf_lists.append(t)
-                    dl_lists.append(dl)
-                    idx += k
-                de, te, le = encode_postings_many(doc_lists, tf_lists, dl_lists)
-                flat_tf = np.concatenate(tf_lists)
-                flat_dl = np.concatenate(dl_lists)
-                lens = np.array([len(x) for x in doc_lists])
-                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                o_term.extend(m_term)
-                o_shard.extend(m_shard)
-                o_block.extend(m_block)
-                o_n.extend(lens.tolist())
-                o_lo.extend(int(x[0]) for x in doc_lists)
-                o_hi.extend(int(x[-1]) for x in doc_lists)
-                o_mtf.extend(np.maximum.reduceat(flat_tf, starts).tolist())
-                o_mdl.extend(np.minimum.reduceat(flat_dl, starts).tolist())
-                o_de.extend(de)
-                o_te.extend(te)
-                o_le.extend(le)
-            if not o_term:
+            whole, split = [], []  # (group row, partials of one block)
+            for g, group in enumerate(pdf["parts"]):
+                for _, run in itertools.groupby(group, lambda p: p["block_id"]):
+                    run = list(run)
+                    (whole if len(run) == 1 else split).append((g, run))
+            if whole:
+                out = pdf[keys].iloc[[g for g, _ in whole]].reset_index(drop=True)
+                for f in _PART_FIELDS:
+                    out[f] = [run[0][f] for _, run in whole]
+                yield out[cols]
+            if not split:
                 continue
-            yield pd.DataFrame(
-                {
-                    "term": o_term,
-                    "shard": np.asarray(o_shard, dtype=np.int32),
-                    "block_id": np.asarray(o_block, dtype=np.int64),
-                    "n": np.asarray(o_n, dtype=np.int32),
-                    "doc_lo": np.asarray(o_lo, dtype=np.int64),
-                    "doc_hi": np.asarray(o_hi, dtype=np.int64),
-                    "max_tf": np.asarray(o_mtf, dtype=np.int32),
-                    "min_dl": np.asarray(o_mdl, dtype=np.int32),
-                    "docs_enc": o_de,
-                    "tfs_enc": o_te,
-                    "dls_enc": o_le,
-                }
+            dd, tt, ll = decode_postings_many(*(
+                [p[f] for _, run in split for p in run]
+                for f in ("docs_enc", "tfs_enc", "dls_enc")
+            ))
+            doc_lists, tf_lists, dl_lists = [], [], []
+            ends = np.cumsum([len(run) for _, run in split])
+            for lo, hi in zip(np.concatenate(([0], ends[:-1])), ends):
+                d, t, dl = (np.concatenate(x[lo:hi]) for x in (dd, tt, ll))
+                # partials may hold interleaved doc ranges (map batches
+                # are arbitrary row ranges) — merge-sort when needed;
+                # (doc, term) is unique, so no tie order to worry about
+                if not np.all(d[1:] > d[:-1]):
+                    o = np.argsort(d, kind="stable")
+                    d, t, dl = d[o], t[o], dl[o]
+                doc_lists.append(d)
+                tf_lists.append(t)
+                dl_lists.append(dl)
+            head = pdf[keys].iloc[[g for g, _ in split]].assign(
+                block_id=[run[0]["block_id"] for _, run in split]
             )
+            yield _blocks_frame(head, doc_lists, tf_lists, dl_lists)[cols]
 
-    return grouped.mapInPandas(merge, schema=POSTINGS_SCHEMA)
+    schema = POSTINGS_SCHEMA + "".join(f", {c} int" for c in carry)
+    return grouped.mapInPandas(merge, schema=schema)
+
+
+def postings_blocks(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """docs → postings table rows (POSTINGS_SCHEMA + term_bucket): the
+    map-side partial encode, then ``reduce_blocks``. The full build and
+    the delta merge both write through here."""
+    return reduce_blocks(partial_blocks(docs, cfg)).withColumn(
+        "term_bucket", _term_bucket(cfg)
+    )
+
+
+def lexicon_rows(dfs: DataFrame, n_docs: int, cfg: IndexConfig) -> DataFrame:
+    """(term, df) → lexicon rows: + Lucene idf under ``n_docs`` and the
+    term's postings bucket."""
+    return dfs.withColumn(
+        "idf",
+        F.log(
+            (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
+            / (F.col("df") + F.lit(0.5))
+            + F.lit(1.0)
+        ),
+    ).withColumn("term_bucket", _term_bucket(cfg))
+
+
+def stats_frame(spark: SparkSession, n_docs: int, total_len: int,
+                 cfg: IndexConfig) -> DataFrame:
+    """The one-row stats table. avgdl is derived from exact longs: an
+    incremental merge that adds (n', total') reproduces the identical
+    double, so scores after a merge match a rebuild bit-for-bit."""
+    avgdl = total_len / n_docs if n_docs else 0.0
+    return spark.createDataFrame(
+        [(n_docs, total_len, avgdl, cfg.k1, cfg.b, cfg.block_range)],
+        "n_docs long, total_len long, avgdl double, "
+        "k1 double, b double, block_range int",
+    )
 
 
 def build_index(
@@ -516,12 +420,15 @@ def build_index_from_docs(
 
     ran_any = False
 
-    with Stage("docs", index_root, overwrite and docs is not None, metrics) as st:
-        if st.needed and docs is not None:
-            write_table(docs, index_root, "docs")
-        elif st.needed:
-            raise ValueError("docs DataFrame required: no docs table at root")
-        ran_any |= st.needed
+    # build_index records its own docs stage and passes None here: only a
+    # passed frame is a docs stage of this call
+    if docs is not None:
+        with Stage("docs", index_root, overwrite, metrics) as st:
+            if st.needed:
+                write_table(docs, index_root, "docs")
+            ran_any |= st.needed
+    elif not table_exists(spark, index_root, "docs"):
+        raise ValueError("docs DataFrame required: no docs table at root")
 
     docs = read_table(spark, index_root, "docs")
 
@@ -532,27 +439,17 @@ def build_index_from_docs(
                 F.count(F.lit(1)).alias("n"),
                 F.sum("doc_len").cast("long").alias("total"),
             ).collect()[0]
-            n_docs, total_len = int(row["n"]), int(row["total"] or 0)
-            # avgdl derived from exact longs: an incremental merge that
-            # adds (n', total') reproduces the identical double — scores
-            # after a merge match a from-scratch rebuild bit-for-bit
-            avgdl = total_len / n_docs if n_docs else 0.0
             write_table(
-                spark.createDataFrame(
-                    [(n_docs, total_len, avgdl, cfg.k1, cfg.b, cfg.block_range)],
-                    "n_docs long, total_len long, avgdl double, "
-                    "k1 double, b double, block_range int",
-                ),
+                stats_frame(spark, int(row["n"]), int(row["total"] or 0), cfg),
                 index_root,
                 "stats",
             )
 
-    stats = read_table(spark, index_root, "stats").collect()[0]
-    n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
+    n_docs = int(read_table(spark, index_root, "stats").collect()[0]["n_docs"])
 
     # One corpus-sized pass total: TF flows straight into posting
     # assembly (the shard is a pure function of doc_id — see
-    # encode_postings), and the lexicon's df is then aggregated from the
+    # partial_blocks), and the lexicon's df is then aggregated from the
     # written block rows (sum of per-block counts == document frequency,
     # since each (doc, term) posting lands in exactly one block). The
     # old layout ran doc_freqs over TF, wrote the lexicon, and joined it
@@ -563,39 +460,16 @@ def build_index_from_docs(
     with Stage("postings", index_root, overwrite, metrics) as st:
         ran_any |= st.needed
         if st.needed:
-            if cfg.postings_path == "twophase":
-                enc = encode_postings_twophase(docs, cfg)
-            else:
-                enc = encode_postings(term_freqs(docs), n_docs, avgdl, cfg)
-            enc = enc.withColumn(
-                "term_bucket",
-                F.pmod(F.xxhash64("term"), F.lit(cfg.n_term_buckets)).cast("int"),
-            )
-            write_table(enc, index_root, "postings", partition_by=["term_bucket"])
+            write_table(postings_blocks(docs, cfg), index_root, "postings",
+                        partition_by=["term_bucket"])
 
     with Stage("lexicon", index_root, overwrite, metrics) as st:
         ran_any |= st.needed
         if st.needed:
-            blocks = read_table(spark, index_root, "postings")
-            lex = (
-                blocks.groupBy("term")
-                .agg(F.sum("n").cast("long").alias("df"))
-                .withColumn(
-                    "idf",
-                    F.log(
-                        (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-                        / (F.col("df") + F.lit(0.5))
-                        + F.lit(1.0)
-                    ),
-                )
-                .withColumn(
-                    "term_bucket",
-                    F.pmod(
-                        F.xxhash64("term"), F.lit(cfg.n_term_buckets)
-                    ).cast("int"),
-                )
+            dfs = read_table(spark, index_root, "postings").groupBy("term").agg(
+                F.sum("n").cast("long").alias("df")
             )
-            write_table(lex, index_root, "lexicon")
+            write_table(lexicon_rows(dfs, n_docs, cfg), index_root, "lexicon")
 
     if ran_any:
         # any (re)written stage changed query-visible state: move the

@@ -311,9 +311,9 @@ def _dedup_reps(
     qrows: list[tuple[str, str, int]],
 ) -> tuple[list[tuple[str, str, int]], dict[str, str], bool]:
     """Batch dedup bookkeeping: one representative query_id per distinct
-    post-tokenize term vector (qrows pairs are term-sorted, so the tuple
-    is canonical; the rep is the first occurrence in caller order —
-    deterministic). Returns (qrows restricted to reps, qid→rep map,
+    post-tokenize term multiset, not only per textually identical query
+    text (qrows pairs are term-sorted, so the tuple is canonical; the rep
+    is the first occurrence in caller order — deterministic). Returns (qrows restricted to reps, qid→rep map,
     whether any fan-out is needed)."""
     pairs_by_qid: dict[str, list[tuple[str, int]]] = {}
     for qid, t, qtf in qrows:
@@ -373,8 +373,8 @@ def bm25_query_topk(
     At the 100 TB tier P ≈ number of executor cores is the right setting
     for fat analytical queries; interactive point queries keep P = 1.
 
-    Textually identical queries (same post-tokenize term multiset) are
-    scored ONCE and fanned back out to every query_id with a broadcast
+    Queries with the same post-tokenize term multiset (not only
+    textually identical ones) are scored ONCE and fanned back out to every query_id with a broadcast
     join: group-by-query scoring replicates each shared posting block
     across the exchange once per query_id, so B duplicates would cost
     B× the shuffle bytes for bit-identical kernel output (the kernel is

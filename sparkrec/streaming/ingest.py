@@ -7,9 +7,13 @@ supports appending new conversations to a live index:
 
 - ``merge_index_delta(spark, new_transcripts, index_root)`` — one batch:
   assemble + tokenize the new conversations, assign doc_ids in a fresh
-  range above the current ``n_docs``, APPEND their posting blocks, merge
-  document frequencies into the lexicon, and update corpus stats from
-  exact long counters. Old posting blocks are never rewritten.
+  range above the current ``n_docs``, APPEND their posting blocks (built
+  by the same partial encode + ``reduce_blocks`` as the full build),
+  merge document frequencies — ``sum(n)`` per term over those blocks,
+  as the build's lexicon takes them — into the lexicon, and update
+  corpus stats from exact long counters. Old posting blocks are never
+  rewritten; ``compact_postings`` later folds boundary blocks back into
+  one row with the same reducer.
 - ``stream_index(...)`` — wraps the merge in a Structured Streaming
   ``foreachBatch`` sink over a file/table source (use
   ``trigger(availableNow=True)`` for catch-up runs; checkpointing makes
@@ -28,7 +32,10 @@ tests/test_streaming_ingest.py):
    are disjoint from old ones except possibly one boundary block id,
    where the scorer already accepts multiple rows per (term, block) —
    per-doc scores come from exactly one row, and the segment upper bound
-   (a sum over rows) stays a valid bound.
+   (a sum over rows) stays a valid bound. Every block is in the one
+   canonical form (operators/indexer.py ``_blocks_frame``), so after
+   ``compact_postings`` the table is byte-identical to a rebuild over
+   the merged docs table.
 4. **WAND bounds**: blocks store ``(max_tf, min_dl)`` and the scorer
    recomputes the bound under the CURRENT avgdl (monotonicity argument in
    operators/scorer.py) — old blocks never hold a stale bound.
@@ -45,9 +52,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkrec.operators.bm25 import term_freqs, tokenize_docs
+from sparkrec.operators.bm25 import tokenize_docs
 from sparkrec.operators.docs import assemble_docs, assign_doc_ids
-from sparkrec.operators.indexer import IndexConfig, encode_postings
+from sparkrec.operators.indexer import (
+    IndexConfig,
+    lexicon_rows,
+    postings_blocks,
+    stats_frame,
+)
 from sparkrec.sources.tables import (
     bump_index_epoch,
     read_table,
@@ -145,69 +157,39 @@ def _merge_locked(
 
     n_docs = n_old + n_new
     total_len = total_old + total_new
-    avgdl = total_len / n_docs
 
-    tf = term_freqs(new_docs)
-    df_delta = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_new"))
+    # the delta's blocks: same partial encode + reducer as the full build.
+    # The shard is a pure function of doc_id (partial_blocks), so they get
+    # the exact shard a from-scratch rebuild would assign. Cached — they
+    # are delta-sized — because the write and df_delta both read them.
+    blocks = _hold(postings_blocks(new_docs, cfg).cache())
+    df_delta = blocks.groupBy("term").agg(F.sum("n").cast("long").alias("df_new"))
 
     # lexicon merge: df adds; idf recomputed for every term under new N
     old_lex = read_table(spark, index_root, "lexicon").select("term", "df")
-    merged = (
-        old_lex.join(df_delta, "term", "full_outer")
-        .select(
+    merged = lexicon_rows(
+        old_lex.join(df_delta, "term", "full_outer").select(
             "term",
             (
                 F.coalesce(F.col("df"), F.lit(0))
                 + F.coalesce(F.col("df_new"), F.lit(0))
             ).alias("df"),
-        )
-        .withColumn(
-            "idf",
-            F.log(
-                (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-                + F.lit(1.0)
-            ),
-        )
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(cfg.n_term_buckets)).cast("int"),
-        )
+        ),
+        n_docs,
+        cfg,
     )
 
     # docs append FIRST (replay marker — see above), then postings, then
     # the tiny lexicon/stats swap
     write_table(new_docs.select(*read_table(spark, index_root, "docs").columns),
                 index_root, "docs", mode="append")
-
-    # postings append: encode ONLY the new docs' blocks. The shard is a
-    # pure function of doc_id (encode_postings), so appended blocks get
-    # the exact shard a from-scratch rebuild would assign — no df join,
-    # and group state stays hard-capped at docs_per_shard postings.
-    # Deltas keep the rows path deliberately: the exchange here is
-    # delta-sized, not corpus-sized, so the twophase pre-encode's CPU
-    # cost buys nothing (BENCH.md round-5 A/B) — and the tf relation is
-    # needed anyway for df_delta above. Either path yields bit-identical
-    # blocks, so merge==rebuild stays exact under the twophase default.
-    enc = encode_postings(tf, n_docs, avgdl, cfg).withColumn(
-        "term_bucket",
-        F.pmod(F.xxhash64("term"), F.lit(cfg.n_term_buckets)).cast("int"),
-    )
-    write_table(enc, index_root, "postings", partition_by=["term_bucket"],
+    write_table(blocks, index_root, "postings", partition_by=["term_bucket"],
                 mode="append")
 
     merged_rows = _hold(merged.cache())
     n_terms = merged_rows.count()  # materialize BEFORE overwriting the input
     write_table(merged_rows, index_root, "lexicon")
-    write_table(
-        spark.createDataFrame(
-            [(n_docs, total_len, avgdl, cfg.k1, cfg.b, cfg.block_range)],
-            "n_docs long, total_len long, avgdl double, "
-            "k1 double, b double, block_range int",
-        ),
-        index_root,
-        "stats",
-    )
+    write_table(stats_frame(spark, n_docs, total_len, cfg), index_root, "stats")
     # poison every handle loaded before this merge: their pinned lexicon
     # map / cached postings / frozen (n_docs, avgdl) no longer describe
     # the index — Index.check_fresh raises on the next query

@@ -1,6 +1,7 @@
 """Postings compaction: answers bit-exact before == after == rebuild,
 one row per (term, block_id) after, file count shrinks, stale handles
-are epoch-poisoned."""
+are epoch-poisoned, and the compacted table is byte-identical to a
+rebuild over the merged docs."""
 
 from __future__ import annotations
 
@@ -15,8 +16,10 @@ from sparkrec.operators.indexer import (
     IndexConfig,
     StaleIndexError,
     build_index,
+    build_index_from_docs,
 )
 from sparkrec.operators.scorer import bm25_query_topk
+from sparkrec.sources.tables import read_table
 from sparkrec.streaming.ingest import merge_index_delta
 
 CFG = IndexConfig(block_range=16, docs_per_shard=64, n_term_buckets=4)
@@ -116,3 +119,31 @@ def test_epoch_chaos_warm_handle_through_compaction(spark, tmp_path):
     finally:
         fresh._postings_cached.unpersist()
         fresh._lexicon_cached.unpersist()
+
+
+def test_build_merge_compact_equals_rebuild_of_merged_docs(spark, tmp_path):
+    """One canonical block form across all three writers of the postings
+    table: build_index(A) + merge_index_delta(B) + compact_postings is
+    byte-identical — shard, term_bucket and the binary columns included —
+    to build_index_from_docs over that index's own docs table (same
+    doc_ids), and so are its lexicon and stats."""
+    root = str(tmp_path / "idx")
+    ref = str(tmp_path / "ref")
+    build_index(spark, transcripts_df(spark, 40, conv_start=0), root, CFG)
+    merge_index_delta(spark, transcripts_df(spark, 25, conv_start=40), root, CFG)
+    out = compact_postings(spark, root)
+    assert out["rows_after"] < out["rows_before"]  # boundary blocks merged
+
+    build_index_from_docs(spark, read_table(spark, root, "docs"), ref, CFG)
+
+    def snapshot(r, name):
+        return sorted(
+            tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                  for v in row)
+            for row in read_table(spark, r, name).collect()
+        )
+
+    for name in ("postings", "lexicon", "stats"):
+        got, want = snapshot(root, name), snapshot(ref, name)
+        assert len(want) > 0, name
+        assert got == want, name

@@ -492,64 +492,90 @@ def test_giant_doc_skew_exact_scores(spark, tmp_path_factory):
             )
 
 
-def test_twophase_matches_rows_bit_exact(spark, index, tmp_path_factory):
-    """The §4.2.1 two-phase build (map-side pre-encoded partials, one
-    exchange of varint bytes) produces a postings table CONTENT-IDENTICAL
-    to the rows path — every column including the binary encodings — and
-    an identical lexicon. Docs are randomly repartitioned into 16 slices
-    so most blocks split across map batches with interleaved doc ranges,
-    exercising the decode→merge-sort→re-encode branch, while rare terms
-    keep single-partial blocks, exercising the passthrough."""
-    from sparkrec.operators.indexer import build_index_from_docs
+def test_postings_match_counter_reference_bit_exact(spark, index,
+                                                    tmp_path_factory):
+    """The postings table against an independent in-test reference: every
+    decoded block agrees with a ``collections.Counter`` over each doc's
+    tokens (per (term, doc_id) tf and dl, block_id = doc_id //
+    block_range, shard = block group) and carries the n / doc_lo /
+    doc_hi / max_tf / min_dl of its own decoded lists. The table is also
+    byte-identical — binary columns included — whether the docs arrive
+    in one partition (every block one partial: the passthrough branch of
+    ``reduce_blocks``) or in 16 (blocks split across map batches with
+    interleaved doc ranges: the decode → merge-sort → re-encode
+    branch)."""
+    from collections import Counter
+
+    from sparkrec.operators.indexer import build_index_from_docs, partial_blocks
     from sparkrec.sources.tables import read_table
 
-    docs = (
-        index.docs(spark)
-        .select("doc_id", "tokens", "doc_len")
-        .repartition(16)
-    )
+    docs = index.docs(spark).select("doc_id", "tokens", "doc_len")
 
-    roots = {}
-    for path in ("rows", "twophase"):
-        cfg = IndexConfig(
-            block_range=CFG.block_range,
-            docs_per_shard=CFG.docs_per_shard,
-            n_term_buckets=CFG.n_term_buckets,
-            postings_path=path,
-        )
-        root = str(tmp_path_factory.mktemp(f"idx_{path}"))
-        build_index_from_docs(spark, docs, root, cfg)
-        roots[path] = root
-
-    def snapshot(root):
-        rows = read_table(spark, root, "postings").collect()
+    def snapshot(root, name="postings"):
         return sorted(
-            (
-                r["term"], r["shard"], r["block_id"], r["n"],
-                r["doc_lo"], r["doc_hi"], r["max_tf"], r["min_dl"],
-                bytes(r["docs_enc"]), bytes(r["tfs_enc"]), bytes(r["dls_enc"]),
-                r["term_bucket"],
-            )
-            for r in rows
+            tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                  for v in r)
+            for r in read_table(spark, root, name).collect()
         )
 
-    post_rows = snapshot(roots["rows"])
-    post_two = snapshot(roots["twophase"])
-    assert len(post_rows) > 0
-    assert post_two == post_rows
+    roots, tables, lexicons = {}, {}, {}
+    for n_parts in (1, 16):
+        sliced = docs.repartition(n_parts)
+        root = roots[n_parts] = str(tmp_path_factory.mktemp(f"idx_p{n_parts}"))
+        build_index_from_docs(spark, sliced, root, CFG)
+        tables[n_parts] = snapshot(root)
+        lexicons[n_parts] = snapshot(root, "lexicon")
+        n_partials = partial_blocks(sliced, CFG).count()
+        # 1 slice: one partial per block; 16: the merge branch really runs
+        if n_parts == 1:
+            assert n_partials == len(tables[n_parts])
+        else:
+            assert n_partials > len(tables[n_parts])
+    assert len(tables[1]) > 0
+    assert tables[16] == tables[1]
+    assert lexicons[16] == lexicons[1]
 
-    def lex(root):
-        return sorted(
-            (r["term"], r["df"], r["idf"], r["term_bucket"])
-            for r in read_table(spark, root, "lexicon").collect()
+    want = {}
+    for r in docs.collect():
+        for term, tf in Counter(r["tokens"]).items():
+            want[(term, r["doc_id"])] = (tf, r["doc_len"])
+    blocks_per_group = CFG.docs_per_shard // CFG.block_range
+    cols = read_table(spark, roots[1], "postings").columns
+    got = {}
+    for row in tables[1]:
+        r = dict(zip(cols, row))
+        (ids,), (tfs,), (dls,) = decode_postings_many(
+            [r["docs_enc"]], [r["tfs_enc"]], [r["dls_enc"]]
         )
+        ids = ids.astype(np.int64)
+        assert np.all(ids // CFG.block_range == r["block_id"])
+        assert r["shard"] == r["block_id"] // blocks_per_group
+        assert (r["n"], r["doc_lo"], r["doc_hi"]) == (len(ids), ids[0], ids[-1])
+        assert (r["max_tf"], r["min_dl"]) == (tfs.max(), dls.min())
+        for d, t, dl in zip(ids, tfs, dls):
+            assert (r["term"], int(d)) not in got
+            got[(r["term"], int(d))] = (int(t), int(dl))
+    assert got == want
 
-    assert lex(roots["twophase"]) == lex(roots["rows"])
 
+def test_manifest_records_docs_once(spark, tmp_path):
+    """build_index records each stage exactly once in _manifest.json —
+    the docs stage of build_index_from_docs runs only for a passed
+    frame — and resuming without a docs table still fails loudly."""
+    import json
 
-def test_twophase_invalid_path_rejected():
-    with pytest.raises(ValueError, match="postings_path"):
-        IndexConfig(postings_path="three-phase")
+    from sparkrec.datagen import transcripts_df
+    from sparkrec.operators.indexer import build_index_from_docs
+
+    root = str(tmp_path / "idx")
+    build_index(spark, transcripts_df(spark, 8), root, cfg=CFG,
+                metrics=MetricsLog(root))
+    with open(os.path.join(root, "_manifest.json")) as f:
+        stages = [s["stage"] for s in json.load(f)["stages"]]
+    assert sorted(stages) == ["docs", "lexicon", "postings", "stats"]
+
+    with pytest.raises(ValueError, match="no docs table"):
+        build_index_from_docs(spark, None, str(tmp_path / "empty"), CFG)
 
 
 def test_duplicate_query_ids_rejected_on_every_path(spark, index):

@@ -13,6 +13,8 @@ engine depends on must be visible in `.explain` output, not assumed.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -399,3 +401,39 @@ def test_point_query_local_fallback_runs_single_scan(spark, index):
         assert jobs == [], f"expected no job inside the subset, got {jobs}"
     finally:
         subset._postings_cached.unpersist()
+
+
+def test_delta_merge_and_compaction_reduce_on_term_shard(spark, tmp_path,
+                                                         monkeypatch):
+    """The delta merge's postings append and compact_postings both run
+    the one block reducer: each writes a plan with exactly one exchange
+    keyed on the term — hashpartitioning(term, shard) — and none keyed
+    (doc_id, term) for a TF aggregation."""
+    from pyspark.sql import DataFrameWriter
+
+    from sparkrec.datagen import transcripts_df
+    from sparkrec.operators.compaction import compact_postings
+    from sparkrec.streaming.ingest import merge_index_delta
+
+    cfg = IndexConfig(block_range=16, docs_per_shard=64, n_term_buckets=4)
+    root = str(tmp_path / "idx")
+    build_index(spark, transcripts_df(spark, 12, conv_start=0), root, cfg)
+
+    written = {}
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written[path] = self._df
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    merge_index_delta(spark, transcripts_df(spark, 8, conv_start=12), root, cfg)
+    compact_postings(spark, root)
+    monkeypatch.undo()
+
+    for name in ("postings", "postings__compact"):
+        p = plan(written[f"{root}/{name}"])
+        keyed = [l for l in p.splitlines()
+                 if "hashpartitioning(" in l and "term#" in l]
+        assert len(keyed) == 1, (name, keyed)
+        assert re.search(r"hashpartitioning\(term#\d+, shard#\d+, ", keyed[0])

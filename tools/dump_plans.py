@@ -30,7 +30,9 @@ def main() -> None:
         tokenize_docs,
     )
     from sparkrec.operators.docs import assemble_docs, assign_doc_ids
-    from sparkrec.operators.indexer import Index, IndexConfig, build_index
+    from sparkrec.operators.indexer import (
+        Index, IndexConfig, build_index, postings_blocks,
+    )
     from sparkrec.operators.scorer import (
         bm25_query_topk, bm25_query_topk_scan,
     )
@@ -40,8 +42,8 @@ def main() -> None:
                       shuffle_partitions=8)
     root = tempfile.mkdtemp(prefix="plans_idx_")
     t = transcripts_df(spark, 80)
-    build_index(spark, t, root,
-                IndexConfig(block_range=32, docs_per_shard=256, n_term_buckets=4))
+    cfg = IndexConfig(block_range=32, docs_per_shard=256, n_term_buckets=4)
+    build_index(spark, t, root, cfg)
     idx = Index.load(spark, root)
 
     docs = tokenize_docs(assign_doc_ids(assemble_docs(t))).cache()
@@ -107,7 +109,19 @@ def main() -> None:
             plan(assemble_docs(t).select("conv_id", "text"), "simple"),
         ),
         (
-            "TF aggregation (index build hot path)",
+            "Posting blocks: partial encode + the one block reducer",
+            "Must show: a `MapInPandas` partial encode (TF counted in-row, "
+            "blocks varint-encoded map-side), exactly ONE Exchange — "
+            "`hashpartitioning(term, shard)` — carrying the encoded "
+            "partials into an `ObjectHashAggregate` (`collect_list` + "
+            "`array_sort`), and the reducer's `MapInPandas`. The full "
+            "build and the streaming delta merge write this plan; "
+            "`compact_postings` runs the same reducer over the stored "
+            "postings scan (tests/test_plans.py).",
+            plan(postings_blocks(idx.docs(spark), cfg), "simple"),
+        ),
+        (
+            "TF aggregation (DataFrame BM25 path)",
             "Must show: `partial_count` (map-side combine) before the "
             "exchange; the tokenize expression fuses into the projection "
             "(JVM, no Python eval).",
