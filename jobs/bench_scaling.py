@@ -138,10 +138,7 @@ def run_single(cores: int, n_convs: int, root: str, trials: int = 2,
     # token): every query is distinct and q/s measures per-query
     # scoring, not dedup fan-out. Records taken with identical tiles
     # (round 5 and before) are not comparable. Parallelism comes from INTER-query distribution (the
-    # groupBy query_id shuffle spreads queries across all cores);
-    # n_score_partitions stays 1 — per-query posting volume at this sf is
-    # far too small to amortize intra-query splitting (that mode is for
-    # hot terms at the full corpus tier, see operators/scorer.py).
+    # groupBy query_id shuffle spreads queries across all cores).
     fixture = [
         (r["query_id"], r["query_text"])
         for _, r in gen_queries(n_convs).iterrows()
@@ -442,8 +439,8 @@ parallelism levels").
 - The only driver-side work is O(#buckets) offset computation and
   O(#stages) table commits — independent of corpus size.
 - Queries prune by `term_bucket` partition + term predicate at the scan
-  and split scoring across doc-aligned ranges (`n_score_partitions`), so
-  query parallelism scales with cores while staying exact.
+  and spread across cores one query per kernel group, so query
+  parallelism scales with cores while staying exact.
 """
     with open(args.out_md, "w") as f:
         f.write(md)

@@ -10,10 +10,11 @@ Cluster run:
         --queries    queries.tsv --k 10 --out results.parquet
 
 --queries is a TSV of ``query_id<TAB>query_text``; --fixture-convs uses
-the deterministic seeded fixture set instead. --score-partitions > 1
-splits each query's scoring across doc-id ranges (exact; use ~executor
-cores for fat analytical queries, keep 1 for interactive latency).
-Prints one JSON line with batch throughput and per-query p50/p99.
+the deterministic seeded fixture set instead. The whole set runs as one
+batch (--mode group or scan); the first --latency-probes queries then run
+one at a time through the in-driver point path (bm25_query_topk_local,
+the serving design). Prints one JSON line with batch throughput and the
+point queries' p50/p99.
 """
 
 from __future__ import annotations
@@ -40,9 +41,6 @@ def parse_args(argv=None):
     p.add_argument("--index-root", required=True)
     p.add_argument("--k", type=int, default=10)
     p.add_argument("--master", default=None)
-    p.add_argument("--score-partitions", type=int, default=None,
-                   help="group mode only: doc-range splits per query"
-                        " (default 1)")
     p.add_argument("--mode", choices=["group", "scan"], default="group",
                    help="group: per-query WAND groups (selective batches);"
                         " scan: doc-range groups with queries shipped to"
@@ -58,13 +56,14 @@ def parse_args(argv=None):
 
 def main(argv=None) -> dict:
     args = parse_args(argv)
-    if args.mode == "scan" and args.score_partitions is not None:
-        print("warning: --mode scan ignores --score-partitions (scan mode"
-              " splits by doc range on its own)", file=sys.stderr)
 
     from sparkrec.datagen import gen_queries
     from sparkrec.operators.indexer import Index
-    from sparkrec.operators.scorer import bm25_query_topk
+    from sparkrec.operators.scorer import (
+        bm25_query_topk,
+        bm25_query_topk_local,
+        bm25_query_topk_scan,
+    )
     from sparkrec.session import get_spark
 
     spark = get_spark(app_name="sparkrec-run-queries", master=args.master)
@@ -90,15 +89,8 @@ def main(argv=None) -> dict:
     warm_sec = time.monotonic() - t_warm
 
     t0 = time.monotonic()
-    if args.mode == "scan":
-        from sparkrec.operators.scorer import bm25_query_topk_scan
-
-        out = bm25_query_topk_scan(spark, idx, qset, args.k)
-    else:
-        out = bm25_query_topk(
-            spark, idx, qset, args.k,
-            n_score_partitions=args.score_partitions,
-        )
+    batch_topk = bm25_query_topk_scan if args.mode == "scan" else bm25_query_topk
+    out = batch_topk(spark, idx, qset, args.k)
     if args.out:
         out.write.mode("overwrite").parquet(args.out)
         n_rows = spark.read.parquet(args.out).count()
@@ -109,7 +101,7 @@ def main(argv=None) -> dict:
     lat = []
     for qid, qtext in qset[: args.latency_probes]:
         t1 = time.monotonic()
-        bm25_query_topk(spark, idx, [(qid, qtext)], args.k).collect()
+        bm25_query_topk_local(spark, idx, [(qid, qtext)], args.k)
         lat.append(time.monotonic() - t1)
     lat.sort()
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkrec import BM25_B, BM25_K1
-from sparkrec.functions.textprep import py_tokenize, tokenize_expr
+from sparkrec.functions.textprep import tokenize_expr
 
 
 def tokenize_docs(
@@ -87,21 +87,40 @@ def bm25_contrib_expr(tf_col, dl_col, idf_col, qtf_col, avgdl: float,
     return qtf_col * idf_col * (tf_col * F.lit(k1 + 1.0)) / (tf_col + norm)
 
 
-def query_terms_df(
-    spark: SparkSession, queries: list[tuple[str, str]],
-    min_token_len: int = 2, remove_numeric: bool = True,
-) -> DataFrame:
-    """(query_id, term, qtf) from raw query texts — the query passes
-    through the SAME clean pipeline as documents (driver-side: queries are
-    tiny; the corpus-side pipeline is the Spark one)."""
-    rows = []
+def _query_term_rows(
+    queries: list[tuple[str, str]], min_token_len: int, remove_numeric: bool
+) -> list[tuple[str, str, int]]:
+    """(query_id, term, qtf) rows from raw query texts, term-sorted per
+    query — the one query tokenizer: the SAME clean pipeline as documents,
+    run driver-side (queries are tiny; no Spark job). Every query path
+    starts here, so this is where a batch that repeats a query_id is
+    rejected: paths keyed by id would otherwise merge (sum twice) or
+    overwrite the repeated queries' terms."""
+    # call-time import: a wrapped textprep.py_tokenize (tracing) is seen
+    from sparkrec.functions.textprep import py_tokenize
+
+    dups = sorted(q for q, c in Counter(q for q, _ in queries).items() if c > 1)
+    if dups:
+        raise ValueError(f"duplicate query_id(s) in one batch: {dups[:5]}")
+    rows: list[tuple[str, str, int]] = []
     for qid, qtext in queries:
         toks = py_tokenize(
             qtext, min_token_len=min_token_len, remove_numeric=remove_numeric
         )
         for t, c in sorted(Counter(toks).items()):
             rows.append((qid, t, c))
-    return spark.createDataFrame(rows, "query_id string, term string, qtf int")
+    return rows
+
+
+def query_terms_df(
+    spark: SparkSession, queries: list[tuple[str, str]],
+    min_token_len: int = 2, remove_numeric: bool = True,
+) -> DataFrame:
+    """(query_id, term, qtf) from raw query texts (``_query_term_rows``)."""
+    return spark.createDataFrame(
+        _query_term_rows(queries, min_token_len, remove_numeric),
+        "query_id string, term string, qtf int",
+    )
 
 
 def bm25_topk(

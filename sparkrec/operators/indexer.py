@@ -93,8 +93,8 @@ class IndexConfig:
     # straggler-bound (hot-term groups pin whole tasks; 8-core encode wall
     # 71 s) while 16k groups smooth the distribution (50 s at 8 cores,
     # fastest measured at 2 cores too). Re-confirmed at 32 cores by the
-    # round-4 steal-gated A/B (jobs/ab_shards.py; BENCH.md "Round-4
-    # docs_per_shard A/B"): 16k won the clean-trial build wall 12.9 s vs
+    # round-4 steal-gated A/B (BENCH.md "Round-4 docs_per_shard A/B"):
+    # 16k won the clean-trial build wall 12.9 s vs
     # 17.8 s. Block CONTENTS and query results
     # are identical for any value here (blocks are cut at block_range
     # boundaries inside any grouping) — but the stored `shard` column

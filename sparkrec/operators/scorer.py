@@ -21,9 +21,17 @@ yields final scores for every doc in the segment. The kernel therefore:
 Everything is vectorized: decode is the batched varint codec; per-segment
 accumulation is sort + reduceat. Exactness is tested against both the
 exhaustive DataFrame path and the pure-Python oracle.
+
+Three entry points share one front end (``_prepare``: tokenize, dedup,
+lexicon lookup) and one pruned block fetch (``_blocks``): the in-driver
+``bm25_query_topk_local`` for point queries, the per-query
+``bm25_query_topk`` and the per-doc-range ``bm25_query_topk_scan`` for
+batches. All three return identical ids and scores.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -31,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparkrec.operators.bm25 import _query_term_rows
 from sparkrec.operators.codec import bm25_weight, decode_postings_many
 from sparkrec.operators.indexer import Index
 
@@ -177,31 +186,6 @@ def wand_topk(
     return top_docs[order], top_scores[order]
 
 
-def _query_term_rows(
-    queries: list[tuple[str, str]], min_token_len: int, remove_numeric: bool
-) -> list[tuple[str, str, int]]:
-    """Driver-side tokenization of the (tiny) query set — the same clean
-    semantics as the corpus pipeline; no Spark job. Every query path
-    starts here, so this is where a batch that repeats a query_id is
-    rejected: paths keyed by id would otherwise merge (group: sum twice)
-    or overwrite (local, scan) the repeated queries' terms."""
-    from collections import Counter
-
-    from sparkrec.functions.textprep import py_tokenize
-
-    dups = sorted(q for q, c in Counter(q for q, _ in queries).items() if c > 1)
-    if dups:
-        raise ValueError(f"duplicate query_id(s) in one batch: {dups[:5]}")
-    rows: list[tuple[str, str, int]] = []
-    for qid, qtext in queries:
-        toks = py_tokenize(
-            qtext, min_token_len=min_token_len, remove_numeric=remove_numeric
-        )
-        for t, c in sorted(Counter(toks).items()):
-            rows.append((qid, t, c))
-    return rows
-
-
 def _lex_lookup(
     spark: SparkSession, index: Index, terms: list[str]
 ) -> tuple[dict[str, float], list[int]]:
@@ -228,6 +212,95 @@ def _lex_lookup(
     )
 
 
+class _Batch(NamedTuple):
+    """A query batch after the front end (``_prepare``)."""
+
+    meta: dict[str, dict[str, tuple[float, int]]]  # rep → term → (idf, qtf)
+    live_terms: list[str]  # sorted; every term found in the lexicon
+    buckets: list[int]  # the live terms' term_buckets
+    rep_for_qid: dict[str, str]  # every query_id (caller order) → its rep
+
+
+def _prepare(
+    spark: SparkSession,
+    index: Index,
+    queries: list[tuple[str, str]],
+    min_token_len: int,
+    remove_numeric: bool,
+) -> _Batch | None:
+    """The one front end of every query path: freshness check →
+    driver-side tokenization (rejects a repeated query_id) → dedup →
+    lexicon lookup. None when no query has a live term.
+
+    Queries with the same post-tokenize term multiset (not only textually
+    identical ones) share one representative — the first in caller order —
+    which is scored ONCE and fanned back out to every query_id. Exact:
+    the kernel is a pure function of the term vector and the index. It
+    also pays: a batch path would otherwise move each shared posting
+    block once per duplicate (an 80×-tiled batch on a 96k-conv index was
+    shuffle-bandwidth-bound, BENCH.md "Query-batch redundancy")."""
+    index.check_fresh()
+    qrows = _query_term_rows(queries, min_token_len, remove_numeric)
+    terms = sorted({t for _, t, _ in qrows})
+    if not terms:
+        return None
+    pairs: dict[str, list[tuple[str, int]]] = {}
+    for qid, t, qtf in qrows:  # term-sorted per query: a canonical signature
+        pairs.setdefault(qid, []).append((t, qtf))
+    rep_of_sig: dict[tuple, str] = {}
+    rep_for_qid = {
+        qid: rep_of_sig.setdefault(tuple(pairs.get(qid, ())), qid)
+        for qid, _ in queries
+    }
+    idf_map, buckets = _lex_lookup(spark, index, terms)
+    meta = {}
+    for rep in rep_of_sig.values():
+        m = {t: (float(idf_map[t]), qtf)
+             for t, qtf in pairs.get(rep, ()) if t in idf_map}
+        if m:
+            meta[rep] = m
+    if not meta:
+        return None
+    return _Batch(meta, sorted(idf_map), buckets, rep_for_qid)
+
+
+_KERNEL_COLS = ("term", "block_id", "max_tf", "min_dl",
+                "docs_enc", "tfs_enc", "dls_enc")
+
+
+def _blocks(
+    spark: SparkSession, index: Index, batch: _Batch, *cols: str
+) -> DataFrame:
+    """The batch's posting blocks: the term_bucket filter prunes
+    partitions, the term filter is pushed into the parquet scan."""
+    return (
+        index.postings_for(spark, batch.buckets)
+        .filter(
+            F.col("term_bucket").isin(batch.buckets)
+            & F.col("term").isin(batch.live_terms)
+        )
+        .select(*cols)
+    )
+
+
+def _fan_out(
+    spark: SparkSession, result: DataFrame, rep_for_qid: dict[str, str]
+) -> DataFrame:
+    """Broadcast-join per-representative top-k back to every query_id;
+    an all-distinct batch passes through unchanged."""
+    if all(rep == qid for qid, rep in rep_for_qid.items()):
+        return result
+    mapping = spark.createDataFrame(
+        sorted((rep, qid) for qid, rep in rep_for_qid.items()),
+        "rep string, query_id string",
+    )
+    return (
+        result.withColumnRenamed("query_id", "rep")
+        .join(F.broadcast(mapping), "rep")
+        .select("query_id", "rank", "doc_id", "score")
+    )
+
+
 def bm25_query_topk_local(
     spark: SparkSession,
     index: Index,
@@ -238,9 +311,10 @@ def bm25_query_topk_local(
     max_blocks: int = 100_000,
 ) -> pd.DataFrame:
     """Interactive single-digit-latency path: the SAME exact WAND kernel
-    runs in-process on the driver over the query terms' posting blocks.
-    Returns a pandas DataFrame (query_id, rank, doc_id, score), identical
-    values to ``bm25_query_topk``.
+    runs in-process on the driver over the query terms' posting blocks,
+    once per representative query (``_prepare``). Returns a pandas
+    DataFrame (query_id, rank, doc_id, score), identical values to
+    ``bm25_query_topk``.
 
     Where the blocks come from:
 
@@ -259,28 +333,16 @@ def bm25_query_topk_local(
     Above ``max_blocks`` blocks this raises on either source, and the
     caller should use the distributed path.
     """
-    index.check_fresh()
-    qrows = _query_term_rows(queries, min_token_len, remove_numeric)
-    terms = sorted({t for _, t, _ in qrows})
-    if not terms:
+    batch = _prepare(spark, index, queries, min_token_len, remove_numeric)
+    if batch is None:
         return _EMPTY.copy()
 
-    idf_map, buckets = _lex_lookup(spark, index, terms)
-    if not idf_map:
-        return _EMPTY.copy()
-
-    resident = index.driver_postings_for(buckets)
+    resident = index.driver_postings_for(batch.buckets)
     if resident is not None:
-        blocks = resident.blocks(sorted(idf_map))
+        blocks = resident.blocks(batch.live_terms)
     else:
         blocks = (
-            index.postings_for(spark, buckets)
-            .filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("term").isin(sorted(idf_map))
-            )
-            .select("term", "block_id", "max_tf", "min_dl",
-                    "docs_enc", "tfs_enc", "dls_enc")
+            _blocks(spark, index, batch, *_KERNEL_COLS)
             .limit(max_blocks + 1)
             .toPandas()
         )
@@ -290,59 +352,15 @@ def bm25_query_topk_local(
             "distributed bm25_query_topk path"
         )
 
-    out = []
-    for qid in dict.fromkeys(q for q, _, _ in qrows):
-        meta = {
-            t: (idf_map[t], qtf)
-            for q2, t, qtf in qrows
-            if q2 == qid and t in idf_map
-        }
-        if not meta:
-            continue
-        qb = blocks[blocks["term"].isin(meta.keys())]
-        out.append(_topk_frame(
-            qid, *wand_topk(qb, meta, k, index.avgdl, index.k1, index.b)
-        ))
-    return pd.concat(out, ignore_index=True) if out else _EMPTY.copy()
-
-
-def _dedup_reps(
-    queries: list[tuple[str, str]],
-    qrows: list[tuple[str, str, int]],
-) -> tuple[list[tuple[str, str, int]], dict[str, str], bool]:
-    """Batch dedup bookkeeping: one representative query_id per distinct
-    post-tokenize term multiset, not only per textually identical query
-    text (qrows pairs are term-sorted, so the tuple is canonical; the rep
-    is the first occurrence in caller order — deterministic). Returns (qrows restricted to reps, qid→rep map,
-    whether any fan-out is needed)."""
-    pairs_by_qid: dict[str, list[tuple[str, int]]] = {}
-    for qid, t, qtf in qrows:
-        pairs_by_qid.setdefault(qid, []).append((t, qtf))
-    rep_of_sig: dict[tuple, str] = {}
-    rep_for_qid: dict[str, str] = {}
-    for qid, _qtext in queries:
-        sig = tuple(pairs_by_qid.get(qid, ()))
-        rep_for_qid[qid] = rep_of_sig.setdefault(sig, qid)
-    fan_out = any(rep != qid for qid, rep in rep_for_qid.items())
-    if fan_out:
-        reps = set(rep_of_sig.values())
-        qrows = [row for row in qrows if row[0] in reps]
-    return qrows, rep_for_qid, fan_out
-
-
-def _fan_out_result(
-    spark: SparkSession, result: DataFrame, rep_for_qid: dict[str, str]
-) -> DataFrame:
-    """Broadcast-join per-representative top-k back to every query_id
-    (exact: the kernel is a pure function of the term vector + index)."""
-    mapping = spark.createDataFrame(
-        sorted((rep, qid) for qid, rep in rep_for_qid.items()),
-        "rep string, query_id string",
-    )
-    return (
-        result.withColumnRenamed("query_id", "rep")
-        .join(F.broadcast(mapping), "rep")
-        .select("query_id", "rank", "doc_id", "score")
+    tops = {
+        rep: wand_topk(blocks[blocks["term"].isin(m.keys())], m, k,
+                       index.avgdl, index.k1, index.b)
+        for rep, m in batch.meta.items()
+    }
+    return pd.concat(
+        [_topk_frame(qid, *tops[rep])
+         for qid, rep in batch.rep_for_qid.items() if rep in tops],
+        ignore_index=True,
     )
 
 
@@ -353,101 +371,48 @@ def bm25_query_topk(
     k: int,
     min_token_len: int = 2,
     remove_numeric: bool = True,
-    n_score_partitions: int | None = None,
 ) -> DataFrame:
     """Batch top-k for a list of (query_id, text) against a built index.
 
-    Plan: driver-side query tokenization (queries are tiny, no Spark job)
-    → lexicon lookup filtered by term (+ its term_bucket for partition
-    pruning) → partition-pruned posting-block scan → ``applyInPandas``
-    groups running the exact WAND kernel → (query_id, rank, doc_id, score).
+    Plan: the driver-side front end (``_prepare``: tokenize, dedup,
+    lexicon lookup — no Spark job on a warm handle) → partition-pruned
+    posting-block scan joined with the broadcast query terms →
+    ``applyInPandas`` groups, ONE per representative query, running the
+    exact WAND kernel (lowest overhead, maximal pruning) → fan-out to
+    every query_id → (query_id, rank, doc_id, score).
 
-    ``n_score_partitions`` controls intra-query scoring parallelism: by
-    default each query is ONE kernel group (lowest overhead, maximal WAND
-    pruning — right for interactive latency at moderate posting volume).
-    With P > 1 the doc-id space is split into P aligned ranges scored in
-    parallel (blocks are doc-aligned across terms, so every range is
-    score-complete); per-range top-k candidates are then merged by a
-    global window. Exactness is unaffected — only the shared θ threshold
-    is weaker, trading some pruning for P-way parallelism on hot terms.
-    At the 100 TB tier P ≈ number of executor cores is the right setting
-    for fat analytical queries; interactive point queries keep P = 1.
-
-    Queries with the same post-tokenize term multiset (not only
-    textually identical ones) are scored ONCE and fanned back out to every query_id with a broadcast
-    join: group-by-query scoring replicates each shared posting block
-    across the exchange once per query_id, so B duplicates would cost
-    B× the shuffle bytes for bit-identical kernel output (the kernel is
-    a pure function of the term vector and the index — measured on a
-    96k-conv index: an 80×-tiled batch is shuffle-bandwidth-bound,
-    BENCH.md "Query-batch redundancy"). All-distinct batches take the
-    original path unchanged.
+    Each posting block crosses the exchange once per query that touches
+    its term; for large analytical batches sharing hot terms use
+    ``bm25_query_topk_scan`` (identical results).
     """
-    index.check_fresh()
-    qrows = _query_term_rows(queries, min_token_len, remove_numeric)
-    terms = sorted({t for _, t, _ in qrows})
-    if not terms:
+    batch = _prepare(spark, index, queries, min_token_len, remove_numeric)
+    if batch is None:
         return spark.createDataFrame([], TOPK_SCHEMA)
 
-    qrows, rep_for_qid, fan_out = _dedup_reps(queries, qrows)
-
-    idf_map, buckets = _lex_lookup(spark, index, terms)
-    live_terms = sorted(idf_map)
-    if not live_terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-
-    blocks = index.postings_for(spark, buckets).filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(live_terms)
-    )
+    blocks = _blocks(spark, index, batch, *_KERNEL_COLS)
     q_with_idf = spark.createDataFrame(
-        [(qid, t, qtf, idf_map[t]) for qid, t, qtf in qrows if t in idf_map],
+        [(rep, t, qtf, idf)
+         for rep, m in batch.meta.items() for t, (idf, qtf) in m.items()],
         "query_id string, term string, qtf int, idf double",
     )
     joined = blocks.join(F.broadcast(q_with_idf), "term").select(
-        "query_id", "term", "qtf", "idf", "block_id", "max_tf", "min_dl",
-        "docs_enc", "tfs_enc", "dls_enc",
+        "query_id", "term", "qtf", "idf", *_KERNEL_COLS[1:]
     )
 
     avgdl, k1, b = index.avgdl, index.k1, index.b
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        meta = {
+            t: (float(idf), int(qtf))
+            for t, idf, qtf in zip(pdf["term"], pdf["idf"], pdf["qtf"])
+        }
         qid = pdf["query_id"].iloc[0]
-        meta = {}
-        for t, idf, qtf in zip(pdf["term"], pdf["idf"], pdf["qtf"]):
-            meta[t] = (float(idf), int(qtf))
         return _topk_frame(qid, *wand_topk(pdf, meta, k, avgdl, k1, b))
 
-    if not n_score_partitions or n_score_partitions <= 1:
-        result = joined.groupBy("query_id").applyInPandas(
-            score_group, schema=TOPK_SCHEMA
-        )
-    else:
-        # parallel mode: doc-aligned range split → per-range exact top-k →
-        # global merge (re-rank) per query
-        max_block = max(1, index.n_docs // index.block_range)
-        blocks_per_part = max(
-            1, (max_block + n_score_partitions) // n_score_partitions
-        )
-        ranged = joined.withColumn(
-            "_range", (F.col("block_id") / F.lit(blocks_per_part)).cast("long")
-        )
-        partial = ranged.groupBy("query_id", "_range").applyInPandas(
-            score_group, schema=TOPK_SCHEMA
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        result = (
-            partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score")
-        )
-
-    if fan_out:
-        result = _fan_out_result(spark, result, rep_for_qid)
-    return result
+    result = joined.groupBy("query_id").applyInPandas(
+        score_group, schema=TOPK_SCHEMA
+    )
+    return _fan_out(spark, result, batch.rep_for_qid)
 
 
 def bm25_query_topk_scan(
@@ -476,8 +441,8 @@ def bm25_query_topk_scan(
     anyway, so there is nothing to skip). Blocks are doc-aligned across
     terms (operators/indexer.py), so each range is score-complete and
     the exact global top-k is the windowed merge of per-range top-k
-    candidates — the same merge the ``n_score_partitions`` mode uses.
-    Results are identical (ids AND scores) to ``bm25_query_topk``.
+    candidates (the engine's one range merge). Results are identical
+    (ids AND scores) to ``bm25_query_topk``.
 
     At the 100 TB tier this is the map-side-join shape: a doc-range-
     partitioned postings layout would make the single exchange a
@@ -494,32 +459,13 @@ def bm25_query_topk_scan(
     bandwidth-vs-CPU trade, in the same direction, as the two-phase
     postings encode (jobs/run_queries.py ``--mode scan``).
     """
-    index.check_fresh()
-    qrows = _query_term_rows(queries, min_token_len, remove_numeric)
-    terms = sorted({t for _, t, _ in qrows})
-    if not terms:
+    batch = _prepare(spark, index, queries, min_token_len, remove_numeric)
+    if batch is None:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    qrows, rep_for_qid, fan_out = _dedup_reps(queries, qrows)
+    q_items = sorted(batch.meta.items())
 
-    idf_map, buckets = _lex_lookup(spark, index, terms)
-    qmeta: dict[str, dict[str, tuple[float, int]]] = {}
-    for qid, t, qtf in qrows:
-        if t in idf_map:
-            qmeta.setdefault(qid, {})[t] = (float(idf_map[t]), int(qtf))
-    qmeta = {q: m for q, m in qmeta.items() if m}
-    if not qmeta:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    live_terms = sorted({t for m in qmeta.values() for t in m})
-    q_items = sorted(qmeta.items())
-
-    blocks = (
-        index.postings_for(spark, buckets)
-        .filter(
-            F.col("term_bucket").isin(buckets)
-            & F.col("term").isin(live_terms)
-        )
-        .select("term", "block_id", "docs_enc", "tfs_enc", "dls_enc")
-    )
+    blocks = _blocks(spark, index, batch,
+                     "term", "block_id", "docs_enc", "tfs_enc", "dls_enc")
     max_block = max(1, index.n_docs // index.block_range)
     n_ranges = n_ranges or spark.sparkContext.defaultParallelism * 4
     blocks_per_part = max(1, (max_block + n_ranges) // n_ranges)
@@ -580,6 +526,4 @@ def bm25_query_topk_scan(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "doc_id", "score")
     )
-    if fan_out:
-        result = _fan_out_result(spark, result, rep_for_qid)
-    return result
+    return _fan_out(spark, result, batch.rep_for_qid)

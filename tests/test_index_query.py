@@ -152,33 +152,32 @@ def test_local_scoring_matches_distributed(spark, index, queries_pdf):
         bm25_query_topk_local(spark, index, queries, 10, max_blocks=1)
 
 
-def test_parallel_scoring_matches_single_group(spark, index, queries_pdf):
-    """Doc-range-parallel WAND (P>1) is exact: identical ids AND scores to
-    the one-group-per-query path, and to it again after warm() pins the
-    serving tables in memory."""
+def test_warm_scoring_matches_cold(spark, index, queries_pdf):
+    """warm() pins the serving tables in memory without changing a
+    single answer: identical ids AND scores before and after."""
     queries = list(zip(queries_pdf["query_id"], queries_pdf["query_text"]))[:8]
     k = 10
-    single = bm25_query_topk(spark, index, queries, k=k).collect()
+    cold = bm25_query_topk(spark, index, queries, k=k).collect()
 
     def keyed(rows):
         return {
             (r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in rows
         }
 
-    par = bm25_query_topk(spark, index, queries, k=k, n_score_partitions=4)
-    assert keyed(par.collect()) == keyed(single)
-
     index.warm(spark)
     warm = bm25_query_topk(spark, index, queries, k=k)
-    assert keyed(warm.collect()) == keyed(single)
+    assert keyed(warm.collect()) == keyed(cold)
 
 
 def test_duplicate_query_batch_dedups_and_fans_out(spark, index, queries_pdf):
     """Textually identical queries are scored once and fanned out
     bit-exactly: every duplicate query_id gets rows identical
     (rank, doc_id, score) to the same text scored in an all-distinct
-    batch (the undeduped path), in both scoring modes; queries whose
-    terms are absent from the index stay absent for every duplicate."""
+    batch (the undeduped path), on the group path and on the in-driver
+    local path; queries whose terms are absent from the index stay
+    absent for every duplicate."""
+    from sparkrec.operators.scorer import bm25_query_topk_local
+
     base = list(zip(queries_pdf["query_id"], queries_pdf["query_text"]))[:4]
     k = 10
 
@@ -204,12 +203,11 @@ def test_duplicate_query_batch_dedups_and_fans_out(spark, index, queries_pdf):
             for rep in range(3):
                 assert got[f"{qid}-t{rep}"] == want[qid]
 
-    got_par = by_qid(
-        bm25_query_topk(
-            spark, index, tiled, k=k, n_score_partitions=2
-        ).collect()
-    )
-    assert got_par == got
+    def local_by_qid(batch):
+        return by_qid(bm25_query_topk_local(spark, index, batch, k=k)
+                      .to_dict("records"))
+
+    assert local_by_qid(tiled) == got
 
     # mixed batch: duplicates alongside originals, plus duplicated
     # queries whose only term is absent from the index
@@ -219,6 +217,7 @@ def test_duplicate_query_batch_dedups_and_fans_out(spark, index, queries_pdf):
         ("q-absent2", "zqzq"),
     ]
     got2 = by_qid(bm25_query_topk(spark, index, mixed, k=k).collect())
+    assert local_by_qid(mixed) == got2
     assert got2[f"{base[0][0]}-dup"] == want[base[0][0]]
     assert "q-absent" not in got2 and "q-absent2" not in got2
     for qid, _ in base:
@@ -592,6 +591,10 @@ def test_duplicate_query_ids_rejected_on_every_path(spark, index):
     for path in (bm25_query_topk, bm25_query_topk_scan, bm25_query_topk_local):
         with pytest.raises(ValueError, match="duplicate query_id"):
             path(spark, index, dup, 5)
+    # the reference path's query input: bm25_topk would sum both
+    # queries' contributions under the one id
+    with pytest.raises(ValueError, match="duplicate query_id"):
+        query_terms_df(spark, dup)
 
 
 def test_driver_postings_match_scan_path(spark, index_root, queries_pdf):
