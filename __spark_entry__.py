@@ -179,6 +179,7 @@ def _index_cache_fingerprint() -> str:
     import sparkrec.operators.codec
     import sparkrec.operators.docs
     import sparkrec.operators.indexer
+    import sparkrec.sources.tables
 
     h = hashlib.md5(repr(sorted(_ENTRY_IDX_CFG.items())).encode())
     for mod in (
@@ -189,6 +190,7 @@ def _index_cache_fingerprint() -> str:
         sparkrec.operators.codec,
         sparkrec.operators.docs,
         sparkrec.operators.indexer,
+        sparkrec.sources.tables,
     ):
         with open(mod.__file__, "rb") as f:
             h.update(f.read())
@@ -1719,10 +1721,16 @@ FROM toks t LEFT JOIN kept k ON k.doc_id = t.doc_id"""
     # BM25 re-derived in DuckDB from the docs table the index build stage
     # persisted (the same tokens the postings encode) — verifies assembly,
     # stats, the compressed postings codec, and the WAND kernel end-to-end
-    # against a from-first-principles SQL scoring.
+    # against a from-first-principles SQL scoring. Only the docs segments
+    # the index commit names count (sources/tables.py).
+    docs_dir = f"{_TRANSCRIPTS_INDEX_ROOT}/docs/"
     transcripts_wand_sql = f"""WITH toks AS (
   SELECT doc_id, tokens
-  FROM read_parquet('{_TRANSCRIPTS_INDEX_ROOT}/docs/*.parquet')),
+  FROM read_parquet('{docs_dir}*/*.parquet', filename = true)
+  WHERE parse_dirpath(filename) IN (
+    SELECT '{docs_dir}' || unnest(json_extract_string(
+             content, '$.tables.docs.segments[*]'))
+    FROM read_text('{_TRANSCRIPTS_INDEX_ROOT}/_CURRENT'))),
 dl AS (SELECT doc_id, len(tokens) AS doc_len FROM toks),
 tf AS (SELECT doc_id, term, count(*)::INTEGER AS tf
        FROM (SELECT doc_id, unnest(tokens) AS term FROM toks)

@@ -5,9 +5,11 @@
         --index-root /data/indexes/transcripts
 
 Merges per-merge file accretion back to one row per (term, block_id) —
-run after a burst of streaming merges to restore scan locality. Answers
-are invariant (tests/test_compaction.py); handles loaded before the run
-are epoch-poisoned and must Index.refresh().
+run after a burst of streaming merges to restore scan locality. The
+rewritten postings land in a new segment that one commit publishes, so
+a crash mid-run leaves the index as it was. Answers are invariant
+(tests/test_compaction.py); handles loaded before the run fail
+``check_fresh`` and must Index.refresh().
 """
 
 from __future__ import annotations

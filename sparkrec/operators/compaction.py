@@ -18,11 +18,11 @@ doc-id-disjoint) and re-encoded in Arrow-batched numpy, then a
 partition-by term_bucket rewrite. The result is byte-identical to a
 rebuild over the merged docs table (tests/test_compaction.py). With an
 Iceberg catalog this would be a per-partition RewriteDataFiles action
-under snapshot isolation; the parquet fallback writes to a sibling
-directory and atomically renames, then bumps the index epoch — answers
-are unchanged but the underlying files moved, so handles with pinned
-postings caches must reload (the same poison-then-refresh handoff as a
-merge).
+under snapshot isolation; the parquet fallback writes one new postings
+segment and commits ``postings = [that segment]`` (sources/tables.py),
+which deletes the old segments. Answers are unchanged but the files
+moved, so handles loaded before it fail ``check_fresh`` and must reload
+(the same handoff as a merge).
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ import os
 from pyspark.sql import SparkSession
 
 from sparkrec.operators.indexer import reduce_blocks
-from sparkrec.sources.tables import bump_index_epoch, read_table
+from sparkrec.sources.tables import read_table, write_table
 
 
 def compact_postings(spark: SparkSession, index_root: str) -> dict:
@@ -40,8 +40,8 @@ def compact_postings(spark: SparkSession, index_root: str) -> dict:
 
     Returns {files_before, files_after, rows_before, rows_after,
     index_epoch}. Safe to run any time — answers are invariant; handles
-    loaded before the compaction are epoch-poisoned because their pinned
-    caches reference replaced files.
+    loaded before the compaction fail ``check_fresh`` because their
+    pinned segments are gone.
     """
     def _count_files(p: str) -> int:
         n = 0
@@ -56,28 +56,9 @@ def compact_postings(spark: SparkSession, index_root: str) -> dict:
 
     # every stored row is a partial of its block: the build/merge reducer
     # joins them, keeping each row's stored term_bucket
-    compacted = reduce_blocks(post)
-
-    tmp = path + "__compact"
-    (
-        compacted.write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(tmp)
-    )
-    old = path + "__old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    import shutil
-
-    shutil.rmtree(old)
-    # Spark's session FileStatusCache may still hold the replaced
-    # directory's listing — later reads of the same path would chase
-    # deleted files without this
-    spark.catalog.refreshByPath(path)
-
-    post2 = read_table(spark, index_root, "postings")
-    rows_after = post2.count()
-    epoch = bump_index_epoch(index_root)
+    epoch = write_table(reduce_blocks(post), index_root, "postings",
+                        partition_by=["term_bucket"])
+    rows_after = read_table(spark, index_root, "postings").count()
 
     return {
         "rows_before": rows_before,

@@ -53,8 +53,8 @@ from sparkrec.operators.bm25 import tokenize_docs
 from sparkrec.operators.codec import decode_postings_many, encode_postings_many
 from sparkrec.operators.docs import assemble_docs, assign_doc_ids
 from sparkrec.sources.tables import (
-    bump_index_epoch,
-    read_index_epoch,
+    Commit,
+    current,
     read_table,
     table_exists,
     write_table,
@@ -63,7 +63,7 @@ from sparkrec.sources.tables import (
 
 class StaleIndexError(RuntimeError):
     """Raised when a loaded/warmed Index handle is queried after the
-    on-disk index moved to a newer epoch (e.g. a streaming merge rewrote
+    on-disk index moved to a newer commit (e.g. a streaming merge rewrote
     lexicon/stats and appended postings). The handle's pinned caches and
     frozen (n_docs, avgdl) would silently mis-score — reload via
     ``Index.load`` or ``Index.refresh`` instead."""
@@ -418,22 +418,18 @@ def build_index_from_docs(
 
     cfg = cfg or IndexConfig()
 
-    ran_any = False
-
     # build_index records its own docs stage and passes None here: only a
     # passed frame is a docs stage of this call
     if docs is not None:
         with Stage("docs", index_root, overwrite, metrics) as st:
             if st.needed:
                 write_table(docs, index_root, "docs")
-            ran_any |= st.needed
     elif not table_exists(spark, index_root, "docs"):
         raise ValueError("docs DataFrame required: no docs table at root")
 
     docs = read_table(spark, index_root, "docs")
 
     with Stage("stats", index_root, overwrite, metrics) as st:
-        ran_any |= st.needed
         if st.needed:
             row = docs.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -458,24 +454,16 @@ def build_index_from_docs(
     # combined pass pair was the bulk of the build wall.
 
     with Stage("postings", index_root, overwrite, metrics) as st:
-        ran_any |= st.needed
         if st.needed:
             write_table(postings_blocks(docs, cfg), index_root, "postings",
                         partition_by=["term_bucket"])
 
     with Stage("lexicon", index_root, overwrite, metrics) as st:
-        ran_any |= st.needed
         if st.needed:
             dfs = read_table(spark, index_root, "postings").groupBy("term").agg(
                 F.sum("n").cast("long").alias("df")
             )
             write_table(lexicon_rows(dfs, n_docs, cfg), index_root, "lexicon")
-
-    if ran_any:
-        # any (re)written stage changed query-visible state: move the
-        # index epoch forward so handles loaded earlier fail loudly
-        # (Index.check_fresh) instead of serving stale idf/avgdl/blocks
-        bump_index_epoch(index_root)
 
 
 class _DriverLexicon:
@@ -549,14 +537,21 @@ class Index:
     k1: float
     b: float
     block_range: int
-    #: epoch of the on-disk index this handle was loaded from; compared
-    #: against the sidecar (or Iceberg snapshot) before serving so a
-    #: handle held across a merge/rebuild fails loudly (StaleIndexError)
-    epoch: int = 1
+    #: the commit this handle pinned at load: every table read it makes
+    #: uses only that commit's segments
+    _commit: Commit
+
+    @property
+    def epoch(self) -> int:
+        """Generation of the pinned commit; compared against the one in
+        force before serving, so a handle held across a merge, compaction
+        or rebuild fails loudly (StaleIndexError)."""
+        return self._commit.generation
 
     @classmethod
     def load(cls, spark: SparkSession, root: str) -> "Index":
-        stats = read_table(spark, root, "stats").collect()[0]
+        commit = current(root)
+        stats = commit.read(spark, "stats").collect()[0]
         return cls(
             root=root,
             n_docs=int(stats["n_docs"]),
@@ -565,7 +560,7 @@ class Index:
             k1=float(stats["k1"]),
             b=float(stats["b"]),
             block_range=int(stats["block_range"]),
-            epoch=read_index_epoch(root) or 1,
+            _commit=commit,
         )
 
     _lexicon_cached: DataFrame | None = None
@@ -597,16 +592,17 @@ class Index:
     POST_DRIVER_CACHE_MAX_BYTES = 64 << 20
 
     def check_fresh(self) -> None:
-        """Raise StaleIndexError if the on-disk index moved past this
-        handle's epoch. A driver-side file read — no Spark job — called
-        by every query path, so stale pinned caches / frozen corpus
-        stats can never silently mis-score after a streaming merge."""
-        cur = read_index_epoch(self.root)
-        if cur is not None and cur != self.epoch:
+        """Raise StaleIndexError if a newer commit replaced this handle's.
+        A driver-side read of the small commit file — no Spark job —
+        called by every query path, so stale pinned caches / frozen
+        corpus stats can never silently mis-score after a streaming
+        merge."""
+        cur = current(self.root).generation
+        if cur != self.epoch:
             raise StaleIndexError(
                 f"index at {self.root} is at epoch {cur}, this handle "
-                f"was loaded at epoch {self.epoch} — a merge or rebuild "
-                "happened; reload with Index.load / Index.refresh"
+                f"was loaded at epoch {self.epoch} — a merge, compaction "
+                "or rebuild committed; reload with Index.load / Index.refresh"
             )
 
     def refresh(self, spark: SparkSession) -> "Index":
@@ -637,7 +633,7 @@ class Index:
         WHOLE table (a bucket-subset warm would drop rows here)."""
         if self._postings_cached is not None and self._postings_buckets is None:
             return self._postings_cached
-        return read_table(spark, self.root, "postings")
+        return self._commit.read(spark, "postings")
 
     def _warm_covers(self, buckets) -> bool:
         """Whether the warm postings cover a query touching ``buckets``:
@@ -655,7 +651,7 @@ class Index:
         picks the cheapest covering source."""
         if self._warm_covers(buckets):
             return self._postings_cached
-        return read_table(spark, self.root, "postings")
+        return self._commit.read(spark, "postings")
 
     def driver_postings_for(self, buckets) -> _DriverPostings | None:
         """The driver-resident blocks when ``warm`` filled them and they
@@ -669,7 +665,7 @@ class Index:
     def lexicon(self, spark: SparkSession) -> DataFrame:
         if self._lexicon_cached is not None:
             return self._lexicon_cached
-        return read_table(spark, self.root, "lexicon")
+        return self._commit.read(spark, "lexicon")
 
     def warm(self, spark: SparkSession, postings: bool = True,
              buckets=None) -> "Index":
@@ -691,7 +687,7 @@ class Index:
         the pruned scan (one job). The copy is never filled on read; it
         belongs to this handle's epoch, and ``refresh`` drops and refills
         it with the executor cache."""
-        lex = read_table(spark, self.root, "lexicon").cache()
+        lex = self._commit.read(spark, "lexicon").cache()
         n_terms = lex.count()
         self._lexicon_cached = lex
         if n_terms <= self.LEX_DRIVER_CACHE_MAX:
@@ -700,7 +696,7 @@ class Index:
                 pdf["term"].tolist(), pdf["idf"], pdf["term_bucket"]
             )
         if postings:
-            post = read_table(spark, self.root, "postings")
+            post = self._commit.read(spark, "postings")
             if buckets is not None:
                 post = post.filter(
                     F.col("term_bucket").isin([int(x) for x in buckets])
@@ -721,4 +717,4 @@ class Index:
         return self
 
     def docs(self, spark: SparkSession) -> DataFrame:
-        return read_table(spark, self.root, "docs")
+        return self._commit.read(spark, "docs")

@@ -324,9 +324,7 @@ def bm25_query_topk_local(
     - otherwise (``warm(postings=False)``, a cold handle, a bucket-subset
       warm that misses the query's buckets, or an index above the driver
       copy's byte cap) the partition-pruned, term-filtered blocks are
-      collected from a scan — one fetch job, zero shuffles (a scan that
-      misses the executor cache also pays Spark's parquet schema
-      inference).
+      collected from a scan — one fetch job, zero shuffles.
 
     Right for interactive point queries whose terms' posting volume is
     bounded (WAND needs block metadata + the blocks it actually decodes).

@@ -3,8 +3,10 @@
 The reference memoizes every expensive step on file existence
 (data_utils.py:302, 457; model.py:178-193; the notebook pickle caches).
 Same semantics here, table-grained: a build stage whose output table
-already exists (complete ``_SUCCESS`` / Iceberg snapshot) is skipped, so
-a killed build resumes from the last completed stage. Stage timings and
+already exists (named in the index's commit, sources/tables.py / an
+Iceberg snapshot) is skipped, so a killed build resumes from the last
+completed stage — each stage commits its own table, and a stage killed
+mid-write left nothing committed. Stage timings and
 row throughputs land in a JSON manifest next to the index — the
 "per-stage metrics" BASELINE.json requires.
 """

@@ -11,13 +11,38 @@ with ``SPARKREC_ICEBERG_CATALOG`` set, names resolve to
 ``catalog.db.table`` identifiers and all reads/writes go through the
 catalog (snapshot isolation, partition-pruned scans, snapshot-diff
 incremental refresh).
+
+The parquet fallback gets the same snapshot isolation from one commit
+pointer. Every write lands in a fresh segment directory
+``<root>/<table>/seg=<id>/`` that is never written again; a table is
+the list of segments the commit names (an append adds one, a replace
+names only the new one). ``write_tables`` publishes any number of table
+writes together through a single ``os.replace`` of ``<root>/_CURRENT``,
+a small JSON of the generation plus, per table, its segments and schema,
+then deletes every segment directory the new commit does not name
+(superseded segments and leftovers of crashed writes). A crash before
+the replace leaves the previous commit in force, so a reader sees a
+write whole or not at all. One writer per root is assumed.
+
+Readers pin a ``Commit``: every read it serves is one scan of only its
+segments, with the stored schema (no inference job), and its generation
+is the index epoch ``Index.check_fresh`` compares — a driver-side read
+of one small file. Under a catalog the generation stays 0 and the
+catalog's own snapshots isolate readers.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+_CURRENT = "_CURRENT"
 
 
 def _catalog() -> str | None:
@@ -25,25 +50,54 @@ def _catalog() -> str | None:
 
 
 def _ident(root: str, name: str) -> str:
-    cat = _catalog()
-    if cat:
-        return f"{cat}.{root}.{name}"
-    return os.path.join(root, name)
+    return f"{_catalog()}.{root}.{name}"
+
+
+@dataclass(frozen=True)
+class Commit:
+    """One published state of an index root: its generation and, per
+    table, ``{"segments": [...], "schema": <StructType json>}``. Under a
+    catalog ``tables`` is None and reads resolve through the catalog."""
+
+    root: str
+    generation: int = 0
+    tables: dict | None = None
+
+    def read(self, spark: SparkSession, name: str) -> DataFrame:
+        if self.tables is None:
+            return spark.read.table(_ident(self.root, name))
+        table = self.tables[name]
+        base = os.path.join(self.root, name)
+        # segment directories are named seg=<id>, so ONE scan over several
+        # of them discovers a consistent partition layout (sibling
+        # directories that are not k=v fail Spark's partition discovery,
+        # and a union of per-segment scans costs a scan per segment)
+        schema = StructType.fromJson(table["schema"]).add("seg", "string")
+        paths = [os.path.join(base, seg) for seg in table["segments"]]
+        return spark.read.schema(schema).option("basePath", base) \
+            .parquet(*paths).drop("seg")
+
+
+def current(root: str) -> Commit:
+    """The commit in force at ``root`` (generation 0, no tables, before
+    the first one)."""
+    if _catalog():
+        return Commit(root)
+    try:
+        with open(os.path.join(root, _CURRENT)) as f:
+            return Commit(root, **json.load(f))
+    except FileNotFoundError:
+        return Commit(root, 0, {})
 
 
 def table_exists(spark: SparkSession, root: str, name: str) -> bool:
     if _catalog():
         return spark.catalog.tableExists(_ident(root, name))
-    path = _ident(root, name)
-    # parquet dir with a _SUCCESS marker = completed write (atomicity via
-    # Spark's commit protocol; Iceberg gives this for free via snapshots)
-    return os.path.isdir(path) and os.path.exists(os.path.join(path, "_SUCCESS"))
+    return name in current(root).tables
 
 
 def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:
-    if _catalog():
-        return spark.read.table(_ident(root, name))
-    return spark.read.parquet(_ident(root, name))
+    return current(root).read(spark, name)
 
 
 def write_table(
@@ -52,50 +106,37 @@ def write_table(
     name: str,
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
-) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if _catalog():
-        writer.format("iceberg").saveAsTable(_ident(root, name))
-    else:
-        writer.parquet(_ident(root, name))
+) -> int:
+    """Write one table as its own commit; returns the new generation."""
+    return write_tables(root, [(name, df, partition_by, mode)])
 
 
-# --- index epoch -----------------------------------------------------------
-#
-# A monotonically increasing counter bumped by every write that changes
-# query-visible index state (fresh build, incremental merge, compaction
-# keeps it — see callers). Readers holding pinned caches compare their
-# load-time epoch against the current one before serving (a driver-side
-# file stat, no Spark job), so a handle warmed before a merge fails loudly
-# instead of silently scoring with stale idf/avgdl/postings. With an
-# Iceberg catalog the equivalent signal is the stats table's snapshot id
-# (metadata-only check); the sidecar file is the parquet-directory
-# fallback used in this sandbox.
-
-_EPOCH_FILE = "_index_epoch"
-
-
-def read_index_epoch(root: str) -> int | None:
-    if _catalog():
-        return None  # catalog mode: snapshot ids supersede the sidecar
-    path = os.path.join(root, _EPOCH_FILE)
-    try:
-        with open(path) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        return None
-
-
-def bump_index_epoch(root: str) -> int:
-    """Increment and persist the epoch; returns the new value."""
+def write_tables(root: str, writes: list[tuple]) -> int:
+    """Write every ``(name, df, partition_by, mode)`` and publish them as
+    ONE commit (``mode`` "append" adds a segment, "overwrite" replaces the
+    table). Returns the new generation (0 under a catalog, where each
+    table write is its own snapshot commit)."""
+    base = current(root)
+    tables = dict(base.tables or {})
+    for name, df, partition_by, mode in writes:
+        writer = df.write.mode(mode).partitionBy(*(partition_by or []))
+        if _catalog():
+            writer.format("iceberg").saveAsTable(_ident(root, name))
+            continue
+        seg = f"seg={uuid.uuid4().hex}"
+        writer.parquet(os.path.join(root, name, seg))
+        kept = tables[name]["segments"] if mode == "append" and name in tables else []
+        tables[name] = {"segments": kept + [seg], "schema": df.schema.jsonValue()}
     if _catalog():
         return 0
-    epoch = (read_index_epoch(root) or 0) + 1
-    os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, _EPOCH_FILE + ".tmp")
+    generation = base.generation + 1
+    tmp = os.path.join(root, _CURRENT + ".tmp")
     with open(tmp, "w") as f:
-        f.write(str(epoch))
-    os.replace(tmp, os.path.join(root, _EPOCH_FILE))
-    return epoch
+        json.dump({"generation": generation, "tables": tables}, f)
+    os.replace(tmp, os.path.join(root, _CURRENT))
+    # only directories are segments; anything unnamed is superseded or a
+    # crashed write's leftover
+    for name, table in tables.items():
+        for seg in set(os.listdir(os.path.join(root, name))) - set(table["segments"]):
+            shutil.rmtree(os.path.join(root, name, seg), ignore_errors=True)
+    return generation

@@ -40,6 +40,12 @@ tests/test_streaming_ingest.py):
    recomputes the bound under the CURRENT avgdl (monotonicity argument in
    operators/scorer.py) — old blocks never hold a stale bound.
 
+Atomicity: the merge writes its docs and postings appends and its new
+lexicon and stats as fresh segments and publishes all four in one commit
+(sources/tables.py). A crash at any point before that commit leaves the
+pre-merge index in force — the replay then merges in full — and a handle
+loaded mid-merge answers from the pre-merge state.
+
 Contract: each batch carries COMPLETE conversations. A late turn for an
 already-indexed conv_id is rejected (it would change that conversation's
 document, i.e. an update, not an append — at the Iceberg tier you would
@@ -60,11 +66,7 @@ from sparkrec.operators.indexer import (
     postings_blocks,
     stats_frame,
 )
-from sparkrec.sources.tables import (
-    bump_index_epoch,
-    read_table,
-    write_table,
-)
+from sparkrec.sources.tables import read_table, write_tables
 
 
 def merge_index_delta(
@@ -126,18 +128,15 @@ def _merge_locked(
 
     # Replay/idempotency handling: foreachBatch is at-least-once, so a
     # crashed epoch can be re-delivered. A batch whose conversations are
-    # ALL already indexed is a replay → skip. A PARTIAL overlap is a real
-    # update attempt → reject (see module contract). With an Iceberg
-    # catalog the whole merge runs as table transactions; the parquet
-    # fallback appends docs FIRST so a replay after any later crash is
-    # detected here and skipped — the worst partial-crash outcome is
-    # docs missing their postings (unsearchable, detectable by comparing
-    # docs vs postings doc counts), never duplicated postings, which
-    # would silently double scores.
+    # ALL already indexed is a replay of a merge that committed → skip. A
+    # PARTIAL overlap is a real update attempt → reject (see module
+    # contract). A merge that crashed before its commit left nothing
+    # visible, so its replay merges in full.
     batch_convs = _hold(new_docs.select("conv_id").distinct().cache())
     n_batch_convs = batch_convs.count()
-    old_convs = read_table(spark, index_root, "docs").select("conv_id")
-    clash = batch_convs.join(old_convs, "conv_id", "left_semi").count()
+    old_docs = read_table(spark, index_root, "docs")
+    clash = batch_convs.join(old_docs.select("conv_id"), "conv_id",
+                             "left_semi").count()
     if clash == n_batch_convs and n_batch_convs > 0:
         return {"docs_added": 0, "n_docs": n_old, "skipped_replay": True}
     if clash:
@@ -179,21 +178,18 @@ def _merge_locked(
         cfg,
     )
 
-    # docs append FIRST (replay marker — see above), then postings, then
-    # the tiny lexicon/stats swap
-    write_table(new_docs.select(*read_table(spark, index_root, "docs").columns),
-                index_root, "docs", mode="append")
-    write_table(blocks, index_root, "postings", partition_by=["term_bucket"],
-                mode="append")
-
     merged_rows = _hold(merged.cache())
-    n_terms = merged_rows.count()  # materialize BEFORE overwriting the input
-    write_table(merged_rows, index_root, "lexicon")
-    write_table(stats_frame(spark, n_docs, total_len, cfg), index_root, "stats")
-    # poison every handle loaded before this merge: their pinned lexicon
-    # map / cached postings / frozen (n_docs, avgdl) no longer describe
-    # the index — Index.check_fresh raises on the next query
-    epoch = bump_index_epoch(index_root)
+    n_terms = merged_rows.count()  # the write reuses this evaluation
+
+    # all four tables land in ONE commit: a crash before it leaves the
+    # pre-merge index, and handles loaded before it stay on that state
+    # until check_fresh sees the new generation
+    epoch = write_tables(index_root, [
+        ("docs", new_docs.select(*old_docs.columns), None, "append"),
+        ("postings", blocks, ["term_bucket"], "append"),
+        ("lexicon", merged_rows, None, "overwrite"),
+        ("stats", stats_frame(spark, n_docs, total_len, cfg), None, "overwrite"),
+    ])
     return {
         "docs_added": n_new,
         "turns_tokens_added": total_new,

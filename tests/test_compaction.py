@@ -1,12 +1,15 @@
 """Postings compaction: answers bit-exact before == after == rebuild,
 one row per (term, block_id) after, file count shrinks, stale handles
-are epoch-poisoned, and the compacted table is byte-identical to a
-rebuild over the merged docs."""
+are epoch-poisoned, a crash mid-compaction changes nothing, and the
+compacted table is byte-identical to a rebuild over the merged docs."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from sparkrec.datagen import transcripts_df
@@ -19,7 +22,7 @@ from sparkrec.operators.indexer import (
     build_index_from_docs,
 )
 from sparkrec.operators.scorer import bm25_query_topk
-from sparkrec.sources.tables import read_table
+from sparkrec.sources.tables import current, read_table
 from sparkrec.streaming.ingest import merge_index_delta
 
 CFG = IndexConfig(block_range=16, docs_per_shard=64, n_term_buckets=4)
@@ -147,3 +150,43 @@ def test_build_merge_compact_equals_rebuild_of_merged_docs(spark, tmp_path):
         got, want = snapshot(root, name), snapshot(ref, name)
         assert len(want) > 0, name
         assert got == want, name
+
+
+def _parquet_files(path):
+    return sorted(os.path.relpath(os.path.join(d, f), path)
+                  for d, _, files in os.walk(path)
+                  for f in files if f.endswith(".parquet"))
+
+
+def test_crash_mid_compaction_leaves_pre_compaction_index(spark, tmp_path,
+                                                          monkeypatch):
+    """A crash inside ``compact_postings`` after its rewrite landed leaves
+    the pre-compaction answers and generation; the next compaction
+    succeeds, and then every table directory holds exactly the parquet
+    files of its committed segments (superseded and crashed ones gone)."""
+    root = str(tmp_path / "idx")
+    build_index(spark, transcripts_df(spark, 40, conv_start=0), root, CFG)
+    merge_index_delta(spark, transcripts_df(spark, 25, conv_start=40), root, CFG)
+    before, generation = _topk(spark, root), current(root).generation
+
+    parquet = DataFrameWriter.parquet
+
+    def crash_after_write(self, path, *args, **kwargs):
+        parquet(self, path, *args, **kwargs)
+        raise RuntimeError("injected crash after the postings rewrite")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_after_write)
+    with pytest.raises(RuntimeError, match="injected"):
+        compact_postings(spark, root)
+    monkeypatch.undo()
+    assert current(root).generation == generation
+    assert _topk(spark, root) == before
+
+    compact_postings(spark, root)
+    assert _topk(spark, root) == before
+    for name, table in current(root).tables.items():
+        committed = sorted(
+            os.path.join(seg, f) for seg in table["segments"]
+            for f in _parquet_files(os.path.join(root, name, seg)))
+        assert committed, name
+        assert _parquet_files(os.path.join(root, name)) == committed, name

@@ -401,19 +401,28 @@ def test_resume_skips_completed_stages(spark, transcripts, index_root):
 
 
 def test_partial_resume_rebuilds_lexicon_from_postings(
-    spark, transcripts, index_root, tmp_path_factory
+    spark, transcripts, index_root, tmp_path_factory, monkeypatch
 ):
     """The one-pass layout aggregates the lexicon FROM the postings
-    table; a partial state with postings present but lexicon missing
-    (crash between the two stage commits) must resume to an index whose
+    table; a partial state with postings committed but lexicon not
+    (a crash in the lexicon stage) must resume to an index whose
     lexicon — and therefore every score — matches the unbroken build."""
-    import shutil
+    from pyspark.sql import DataFrameWriter
 
     from sparkrec.operators.scorer import bm25_query_topk
 
     root2 = str(tmp_path_factory.mktemp("resume2"))
-    build_index(spark, transcripts, root2, cfg=CFG)
-    shutil.rmtree(os.path.join(root2, "lexicon"))
+    parquet = DataFrameWriter.parquet
+
+    def crash_at_lexicon(self, path, *args, **kwargs):
+        if path.startswith(os.path.join(root2, "lexicon")):
+            raise RuntimeError("injected crash in the lexicon stage")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_at_lexicon)
+    with pytest.raises(RuntimeError, match="injected"):
+        build_index(spark, transcripts, root2, cfg=CFG)
+    monkeypatch.undo()
 
     metrics = MetricsLog(root2)
     n_before = len(metrics.stages)

@@ -1,11 +1,16 @@
 """Incremental index refresh: a merged index must answer queries
 rank-identical (ids AND scores) to a from-scratch rebuild over the union
-corpus; replays are skipped; partial-update batches are rejected."""
+corpus; replays are skipped; partial-update batches are rejected; a merge
+is all-or-nothing for crashes and for readers."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
+
+from pyspark.sql import DataFrameWriter
 
 from sparkrec.datagen import transcripts_df
 from sparkrec.operators.indexer import (
@@ -154,6 +159,85 @@ def test_merge_replay_skipped_and_partial_rejected(spark, tmp_path):
     overlap = transcripts_df(spark, 20, conv_start=50)
     with pytest.raises(ValueError, match="append-only"):
         merge_index_delta(spark, overlap, root, CFG)
+
+
+MERGE_TABLES = ("docs", "postings", "lexicon", "stats")
+
+
+def _after_write(monkeypatch, root, fn):
+    """Call ``fn(table)`` right after each table write under ``root``
+    has landed its files (before anything can publish them)."""
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        out = parquet(self, path, *args, **kwargs)
+        for name in MERGE_TABLES:
+            if path.startswith(os.path.join(root, name)):
+                fn(name)
+        return out
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+
+
+def test_crash_mid_merge_leaves_pre_merge_index(spark, tmp_path, monkeypatch):
+    """A crash right after any one of the merge's table writes leaves
+    ``Index.load`` on the pre-merge state; the replay of the batch then
+    really merges (no skipped_replay), later merges keep doc ids distinct,
+    and the answers equal a rebuild over the union."""
+    root = str(tmp_path / "idx")
+    full_root = str(tmp_path / "full")
+    batch_a = transcripts_df(spark, 40, conv_start=0)
+    batch_b = transcripts_df(spark, 30, conv_start=40)
+    batch_c = transcripts_df(spark, 20, conv_start=70)
+    build_index(spark, batch_a, root, CFG)
+    pre = _topk(spark, root)
+
+    for crash_at in MERGE_TABLES:
+        def crash(name, crash_at=crash_at):
+            if name == crash_at:
+                raise RuntimeError(f"injected crash after the {name} write")
+
+        _after_write(monkeypatch, root, crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            merge_index_delta(spark, batch_b, root, CFG)
+        monkeypatch.undo()
+        idx = Index.load(spark, root)
+        assert idx.n_docs == idx.docs(spark).count() == 40, crash_at
+        assert _topk(spark, root, idx=idx) == pre, crash_at
+
+    replay = merge_index_delta(spark, batch_b, root, CFG)
+    assert not replay.get("skipped_replay") and replay["docs_added"] == 30
+    assert merge_index_delta(spark, batch_c, root, CFG)["docs_added"] == 20
+
+    idx = Index.load(spark, root)
+    docs = idx.docs(spark)
+    assert idx.n_docs == docs.count() == docs.select("doc_id").distinct().count() == 90
+    build_index(spark, batch_a.unionByName(batch_b).unionByName(batch_c),
+                full_root, CFG)
+    assert _topk(spark, root, idx=idx) == _topk(spark, full_root)
+
+
+def test_handle_loaded_mid_merge_answers_pre_merge(spark, tmp_path, monkeypatch):
+    """A handle loaded while a merge is writing — after each of its table
+    writes, before the commit — answers exactly like the pre-merge index
+    (ids and scores), and turns stale once the merge commits."""
+    root = str(tmp_path / "idx")
+    build_index(spark, transcripts_df(spark, 40, conv_start=0), root, CFG)
+    pre = bm25_query_topk_local(spark, Index.load(spark, root), QUERIES, 10)
+    assert len(pre) > 0
+    mid = {}
+
+    def load_and_query(name):
+        mid[name] = Index.load(spark, root)
+        got = bm25_query_topk_local(spark, mid[name], QUERIES, 10)
+        pd.testing.assert_frame_equal(got, pre, check_exact=True)
+
+    _after_write(monkeypatch, root, load_and_query)
+    merge_index_delta(spark, transcripts_df(spark, 30, conv_start=40), root, CFG)
+    monkeypatch.undo()
+    assert set(mid) == set(MERGE_TABLES)
+    with pytest.raises(StaleIndexError, match="epoch"):
+        bm25_query_topk_local(spark, mid["stats"], QUERIES, 10)
 
 
 def test_structured_streaming_ingest(spark, tmp_path):
