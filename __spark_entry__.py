@@ -19,7 +19,9 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import sys
+import time
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -198,11 +200,35 @@ def _index_cache_fingerprint() -> str:
 
 
 _IDX_FP = _index_cache_fingerprint()
+#: directory of the entry-contract index roots
+_ENTRY_IDX_BASE = "/tmp"
+_ENTRY_IDX_PREFIX = "sparkrec_entry_idx_"
+#: a root of another fingerprint is deleted once untouched this long: a
+#: contract check of another commit may still be reading its roots
+_STALE_ROOT_S = 3600
 
 
 def _entry_index_root(sf_dir: str) -> str:
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return os.path.join("/tmp", f"sparkrec_entry_idx_{_IDX_FP}_{tag}")
+    return os.path.join(_ENTRY_IDX_BASE, f"{_ENTRY_IDX_PREFIX}{_IDX_FP}_{tag}")
+
+
+def _prune_stale_index_roots() -> None:
+    """Delete the entry index roots of other fingerprints that have not
+    been touched for ``_STALE_ROOT_S``: every change to a fingerprinted
+    source builds new roots, and nothing else removes the old ones."""
+    cutoff = time.time() - _STALE_ROOT_S
+    for name in os.listdir(_ENTRY_IDX_BASE):
+        if (not name.startswith(_ENTRY_IDX_PREFIX)
+                or name.startswith(f"{_ENTRY_IDX_PREFIX}{_IDX_FP}_")):
+            continue
+        path = os.path.join(_ENTRY_IDX_BASE, name)
+        try:
+            stale = os.path.getmtime(path) < cutoff
+        except FileNotFoundError:  # another process pruned it first
+            continue
+        if stale:
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def _docs_index(spark: SparkSession, sf_dir: str):
@@ -211,6 +237,8 @@ def _docs_index(spark: SparkSession, sf_dir: str):
     from sparkrec.operators.indexer import Index, IndexConfig, build_index_from_docs
 
     root = _entry_index_root(sf_dir)
+    if not os.path.exists(root):
+        _prune_stale_index_roots()
     cfg = IndexConfig(**_ENTRY_IDX_CFG)
     docs = _tokenized(spark, sf_dir)
     build_index_from_docs(spark, docs, root, cfg)
@@ -963,7 +991,8 @@ def q_media_decode(spark, sf_dir):
 # re-derives BM25 from it and must match the WAND kernel's scores).
 # The fingerprint in the name auto-invalidates the cache on any relevant
 # code/config change (see _index_cache_fingerprint).
-_TRANSCRIPTS_INDEX_ROOT = f"/tmp/sparkrec_entry_idx_{_IDX_FP}_transcripts"
+_TRANSCRIPTS_INDEX_ROOT = os.path.join(
+    _ENTRY_IDX_BASE, f"{_ENTRY_IDX_PREFIX}{_IDX_FP}_transcripts")
 TRANSCRIPT_QUERIES = [("t1", "term0001 term0007"), ("t2", "term0500")]
 
 
@@ -976,6 +1005,8 @@ def q_transcripts_wand(spark, sf_dir):
     from sparkrec.operators.scorer import bm25_query_topk
 
     root = _TRANSCRIPTS_INDEX_ROOT
+    if not os.path.exists(root):
+        _prune_stale_index_roots()
     cfg = IndexConfig(**_ENTRY_IDX_CFG)
     t = transcripts_df(spark, n_convs=150)
     build_index(spark, t, root, cfg)

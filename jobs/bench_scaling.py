@@ -26,65 +26,19 @@ import os
 import shutil
 import subprocess
 import sys
-import threading
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-# ---------------------------------------------------------------------------
-# Hypervisor-steal gating (BENCH.md "measurement gotchas"): the box's noise
-# is steal, invisible to loadavg, and it taxes wide phases harder than
-# narrow ones — systematically depressing low→high efficiency ratios. Each
-# trial is therefore sampled at 1 Hz from /proc/stat (aggregate cpu line,
-# field 8 = steal jiffies) and DISCARDED + retried when the window's mean
-# or sustained 10 s rolling-mean stolen-vCPU figure exceeds the gate (a
-# single stolen second in a many-minute window is harmless noise; gating
-# on the raw 1 s peak rejects nearly every long trial on this box).
-# ---------------------------------------------------------------------------
-
-def _steal_jiffies() -> int:
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[8])
-
-
-class StealSampler(threading.Thread):
-    """1 Hz stolen-vCPU trace for one trial window."""
-
-    def __init__(self, period: float = 1.0):
-        super().__init__(daemon=True)
-        self.period = period
-        self.trace: list[float] = []
-        self._halt = threading.Event()
-        self._hz = os.sysconf("SC_CLK_TCK")
-
-    def run(self):
-        prev_j, prev_t = _steal_jiffies(), time.monotonic()
-        while not self._halt.wait(self.period):
-            j, t = _steal_jiffies(), time.monotonic()
-            if t > prev_t:
-                self.trace.append((j - prev_j) / self._hz / (t - prev_t))
-            prev_j, prev_t = j, t
-
-    def stop(self) -> dict:
-        self._halt.set()
-        self.join(timeout=5)
-        tr = self.trace or [0.0]
-        # burst = worst 10-sample rolling mean: a single stolen second in
-        # a 15-minute window is noise a best-of-N wall shrugs off, but a
-        # SUSTAINED multi-vCPU burst is exactly what skews wide phases —
-        # gate on the sustained figure, record the raw 1 s peak too.
-        win = min(10, len(tr))
-        roll = max(
-            sum(tr[i:i + win]) / win for i in range(len(tr) - win + 1)
-        )
-        return {
-            "steal_mean_vcpu": round(sum(tr) / len(tr), 3),
-            "steal_peak_vcpu": round(max(tr), 3),
-            "steal_burst10_vcpu": round(roll, 3),
-            "steal_trace": [round(x, 2) for x in tr],
-        }
+# Hypervisor-steal gating (BENCH.md "measurement gotchas"): each trial is
+# sampled at 1 Hz (sparkrec/plans/steal.py) and DISCARDED + retried when
+# the window's mean or sustained 10 s rolling-mean stolen-vCPU figure
+# exceeds the gate (a single stolen second in a many-minute window is
+# harmless noise; gating on the raw 1 s peak rejects nearly every long
+# trial on a noisy shared host).
+from sparkrec.plans.steal import StealSampler  # noqa: E402
 
 
 def run_single(cores: int, n_convs: int, root: str, trials: int = 2,

@@ -4,9 +4,10 @@
     spark-submit --py-files sparkrec.zip jobs/compact_postings.py \
         --index-root /data/indexes/transcripts
 
-Merges per-merge file accretion back to one row per (term, block_id) —
-run after a burst of streaming merges to restore scan locality. The
-rewritten postings land in a new segment that one commit publishes, so
+Merges per-merge file accretion back to one row per (term, block_id),
+and the merges' docs segments into one — run after a burst of streaming
+merges to restore scan locality. The rewritten tables land in new
+segments that one commit publishes, so
 a crash mid-run leaves the index as it was. Answers are invariant
 (tests/test_compaction.py); handles loaded before the run fail
 ``check_fresh`` and must Index.refresh().

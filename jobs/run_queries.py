@@ -48,7 +48,7 @@ def parse_args(argv=None):
                         " large analytical batches (identical results)")
     p.add_argument("--out", default=None, help="optional parquet output path")
     p.add_argument("--no-warm", action="store_true",
-                   help="skip pinning lexicon+postings in memory first")
+                   help="skip filling the driver lexicon+postings copies first")
     p.add_argument("--latency-probes", type=int, default=10,
                    help="how many queries to also run one-at-a-time for p50/p99")
     return p.parse_args(argv)

@@ -20,9 +20,12 @@ rebuild over the merged docs table (tests/test_compaction.py). With an
 Iceberg catalog this would be a per-partition RewriteDataFiles action
 under snapshot isolation; the parquet fallback writes one new postings
 segment and commits ``postings = [that segment]`` (sources/tables.py),
-which deletes the old segments. Answers are unchanged but the files
-moved, so handles loaded before it fail ``check_fresh`` and must reload
-(the same handoff as a merge).
+which deletes the old segments. Each merge also appends a docs segment,
+so when the docs table has more than one, the same commit replaces them
+with one rewritten segment (same rows): the docs read's file count stays
+bounded under a continuous ``stream_index``. Answers are unchanged but
+the files moved, so handles loaded before it fail ``check_fresh`` and
+must reload (the same handoff as a merge).
 """
 
 from __future__ import annotations
@@ -32,16 +35,19 @@ import os
 from pyspark.sql import SparkSession
 
 from sparkrec.operators.indexer import reduce_blocks
-from sparkrec.sources.tables import read_table, write_table
+from sparkrec.sources.tables import current, read_table, write_tables
 
 
 def compact_postings(spark: SparkSession, index_root: str) -> dict:
-    """Rewrite the postings table with one row per (term, block_id).
+    """Rewrite the postings table with one row per (term, block_id), and
+    fold a docs table of several segments (one per merge) into one, in
+    the same commit.
 
     Returns {files_before, files_after, rows_before, rows_after,
-    index_epoch}. Safe to run any time — answers are invariant; handles
-    loaded before the compaction fail ``check_fresh`` because their
-    pinned segments are gone.
+    index_epoch}; the file and row counts are the postings table's. Safe
+    to run any time — answers are invariant; handles loaded before the
+    compaction fail ``check_fresh`` because their pinned segments are
+    gone.
     """
     def _count_files(p: str) -> int:
         n = 0
@@ -51,13 +57,16 @@ def compact_postings(spark: SparkSession, index_root: str) -> dict:
 
     path = os.path.join(index_root, "postings")
     files_before = _count_files(path)
-    post = read_table(spark, index_root, "postings")
+    commit = current(index_root)
+    post = commit.read(spark, "postings")
     rows_before = post.count()
 
     # every stored row is a partial of its block: the build/merge reducer
     # joins them, keeping each row's stored term_bucket
-    epoch = write_table(reduce_blocks(post), index_root, "postings",
-                        partition_by=["term_bucket"])
+    writes = [("postings", reduce_blocks(post), ["term_bucket"], "overwrite")]
+    if commit.tables and len(commit.tables["docs"]["segments"]) > 1:
+        writes.append(("docs", commit.read(spark, "docs"), None, "overwrite"))
+    epoch = write_tables(index_root, writes)
     rows_after = read_table(spark, index_root, "postings").count()
 
     return {

@@ -64,7 +64,7 @@ from sparkrec.sources.tables import (
 class StaleIndexError(RuntimeError):
     """Raised when a loaded/warmed Index handle is queried after the
     on-disk index moved to a newer commit (e.g. a streaming merge rewrote
-    lexicon/stats and appended postings). The handle's pinned caches and
+    lexicon/stats and appended postings). The handle's driver copies and
     frozen (n_docs, avgdl) would silently mis-score — reload via
     ``Index.load`` or ``Index.refresh`` instead."""
 
@@ -494,11 +494,11 @@ class _DriverLexicon:
 
 
 class _DriverPostings:
-    """Driver-resident copy of the warmed posting blocks.
+    """Driver-resident copy of the committed posting blocks.
 
     One pandas frame of (term, block_id, max_tf, min_dl, docs_enc,
     tfs_enc, dls_enc) sorted by (term, block_id) — the blocks stay
-    varint-encoded, so the copy costs about the executor cache's bytes —
+    varint-encoded, so the copy costs about the stored column bytes —
     plus a term → (start, end) row-range dict. A query's blocks are the
     ``iloc`` slices of its terms: no Spark job.
     """
@@ -563,22 +563,19 @@ class Index:
             _commit=commit,
         )
 
-    _lexicon_cached: DataFrame | None = None
-    _postings_cached: DataFrame | None = None
-    #: term_bucket subset the postings cache covers; None = full table.
-    #: Query paths must route through ``postings_for`` so a subset warm
-    #: can never silently serve a query whose terms live outside it.
-    _postings_buckets: frozenset | None = None
     _lexicon_map: _DriverLexicon | None = None
-    #: driver copy of exactly the rows of ``_postings_cached``; filled by
-    #: ``warm`` only, never on read
+    #: driver copy of the committed postings; filled by ``warm`` only,
+    #: never on read
     _driver_postings: _DriverPostings | None = None
+    #: the ``postings`` argument of the last ``warm`` (None: never
+    #: warmed); ``refresh`` re-warms the new handle to the same level
+    _warmed_postings: bool | None = None
 
     #: build the driver-resident lexicon only below this vocabulary size.
     #: The standard serving design keeps the lexicon in RAM (it is the
     #: index's "dimension table"); 1M entries ≈ 100 MB in the compact
     #: _DriverLexicon layout — bounded on the 8g driver. Above the cap,
-    #: query paths fall back to the distributed lexicon lookup — nothing
+    #: query paths fall back to a term-filtered lexicon scan — nothing
     #: breaks, one extra Spark job per query.
     LEX_DRIVER_CACHE_MAX = 1_000_000
 
@@ -587,14 +584,14 @@ class Index:
     #: the perfbench serve index, 0.65 MB of blocks (5.2k rows) raised
     #: driver peak RSS by 3.9 MB — ~6× the encoded bytes, collect-time
     #: transients included — so the cap bounds a fill near 0.4 GB on
-    #: the 8g driver. Above it, warm point queries take the pruned scan
-    #: of the executor cache — nothing breaks, one Spark job per query.
+    #: the 8g driver. Above it, warm point queries take the pruned
+    #: parquet scan — nothing breaks, one Spark job per query.
     POST_DRIVER_CACHE_MAX_BYTES = 64 << 20
 
     def check_fresh(self) -> None:
         """Raise StaleIndexError if a newer commit replaced this handle's.
         A driver-side read of the small commit file — no Spark job —
-        called by every query path, so stale pinned caches / frozen
+        called by every query path, so stale driver copies / frozen
         corpus stats can never silently mis-score after a streaming
         merge."""
         cur = current(self.root).generation
@@ -606,114 +603,57 @@ class Index:
             )
 
     def refresh(self, spark: SparkSession) -> "Index":
-        """Release this handle's pinned caches and return a fresh handle
-        at the current epoch, re-warmed to the same level (the post-merge
+        """Drop this handle's driver copies and return a fresh handle at
+        the current epoch, re-warmed to the same level (the post-merge
         serving handoff: old handle poisoned, new one takes over)."""
-        re_post = self._postings_cached is not None
-        re_buckets = self._postings_buckets
-        re_warm = re_post or self._lexicon_cached is not None
-        for df in (self._lexicon_cached, self._postings_cached):
-            if df is not None:
-                df.unpersist()
-        self._lexicon_cached = None
-        self._postings_cached = None
-        self._postings_buckets = None
         self._lexicon_map = None
         self._driver_postings = None
         idx = Index.load(spark, self.root)
-        if re_warm:
-            idx.warm(
-                spark, postings=re_post,
-                buckets=sorted(re_buckets) if re_buckets is not None else None,
-            )
+        if self._warmed_postings is not None:
+            idx.warm(spark, postings=self._warmed_postings)
         return idx
 
     def postings(self, spark: SparkSession) -> DataFrame:
-        """Full postings table — the warm cache only when it covers the
-        WHOLE table (a bucket-subset warm would drop rows here)."""
-        if self._postings_cached is not None and self._postings_buckets is None:
-            return self._postings_cached
         return self._commit.read(spark, "postings")
-
-    def _warm_covers(self, buckets) -> bool:
-        """Whether the warm postings cover a query touching ``buckets``:
-        a full warm, or a subset warm that is a superset of them."""
-        return self._postings_cached is not None and (
-            self._postings_buckets is None
-            or frozenset(buckets) <= self._postings_buckets
-        )
-
-    def postings_for(self, spark: SparkSession, buckets) -> DataFrame:
-        """Postings source for a query touching only ``buckets``: the warm
-        cache when it covers them, else the base parquet scan — whose
-        term_bucket partition pruning makes the cold path cheap.
-        The caller still applies its own bucket/term filters; this only
-        picks the cheapest covering source."""
-        if self._warm_covers(buckets):
-            return self._postings_cached
-        return self._commit.read(spark, "postings")
-
-    def driver_postings_for(self, buckets) -> _DriverPostings | None:
-        """The driver-resident blocks when ``warm`` filled them and they
-        cover ``buckets`` (the same rule as ``postings_for``: the copy
-        holds exactly the executor cache's rows); else None, and the
-        caller takes the pruned scan."""
-        if self._driver_postings is not None and self._warm_covers(buckets):
-            return self._driver_postings
-        return None
 
     def lexicon(self, spark: SparkSession) -> DataFrame:
-        if self._lexicon_cached is not None:
-            return self._lexicon_cached
         return self._commit.read(spark, "lexicon")
 
-    def warm(self, spark: SparkSession, postings: bool = True,
-             buckets=None) -> "Index":
-        """Pin serving tables in executor memory (the search-server warm-up:
-        a production index is resident, not re-decoded from parquet per
-        query). Lexicon always; postings optionally — and at the 100 TB
-        tier you pass ``buckets=[...]`` to pin only the HOT term_buckets
-        (the partition-pruned subset scan) and leave the cold tail on
-        parquet: queries whose terms all live in warmed buckets serve
-        from memory, anything else transparently falls back to the pruned
-        cold scan (``postings_for``) with identical results.
+    def warm(self, spark: SparkSession, postings: bool = True) -> "Index":
+        """Fill this handle's driver-resident copies (the search-server
+        warm-up), read from its commit's parquet. Nothing is cached on
+        executors: every batch path scans the pruned parquet whether or
+        not the handle is warm.
 
-        With ``postings=True`` the warmed blocks are also copied into the
-        driver (``_DriverPostings``) when their encoded bytes are below
-        ``POST_DRIVER_CACHE_MAX_BYTES``; the one job that pins the cache
-        also sums those bytes. ``bm25_query_topk_local`` then serves
-        covered queries with zero Spark jobs. Above the cap, for queries
-        outside a subset warm, and on ``postings=False`` handles, it takes
-        the pruned scan (one job). The copy is never filled on read; it
-        belongs to this handle's epoch, and ``refresh`` drops and refills
-        it with the executor cache."""
-        lex = self._commit.read(spark, "lexicon").cache()
-        n_terms = lex.count()
-        self._lexicon_cached = lex
-        if n_terms <= self.LEX_DRIVER_CACHE_MAX:
+        The lexicon map (``_DriverLexicon``) is built when the vocabulary
+        is at most ``LEX_DRIVER_CACHE_MAX`` terms; query paths then look
+        up idf and buckets with no Spark job. With ``postings=True`` the
+        posting blocks are copied into the driver (``_DriverPostings``)
+        when their encoded bytes, summed by one job, are below
+        ``POST_DRIVER_CACHE_MAX_BYTES``; ``bm25_query_topk_local`` then
+        serves point queries with zero Spark jobs. Above the caps, and
+        on ``postings=False`` handles, the query paths scan the pruned
+        parquet (one job each). The copies are never filled on read;
+        they belong to this handle's epoch, and ``refresh`` refills them
+        on the new handle."""
+        lex = self.lexicon(spark)
+        self._lexicon_map = None
+        if lex.count() <= self.LEX_DRIVER_CACHE_MAX:
             pdf = lex.select("term", "idf", "term_bucket").toPandas()
             self._lexicon_map = _DriverLexicon(
                 pdf["term"].tolist(), pdf["idf"], pdf["term_bucket"]
             )
+        self._driver_postings = None
         if postings:
-            post = self._commit.read(spark, "postings")
-            if buckets is not None:
-                post = post.filter(
-                    F.col("term_bucket").isin([int(x) for x in buckets])
-                )
-            post = post.cache()
+            post = self.postings(spark)
             enc_bytes = post.agg(F.sum(
                 F.length("docs_enc") + F.length("tfs_enc") + F.length("dls_enc")
             )).collect()[0][0] or 0
-            self._postings_cached = post
-            self._postings_buckets = (
-                None if buckets is None else frozenset(int(x) for x in buckets)
-            )
-            self._driver_postings = None
             if enc_bytes < self.POST_DRIVER_CACHE_MAX_BYTES:
                 self._driver_postings = _DriverPostings(
                     post.select(*_DriverPostings.COLUMNS).toPandas()
                 )
+        self._warmed_postings = postings
         return self
 
     def docs(self, spark: SparkSession) -> DataFrame:

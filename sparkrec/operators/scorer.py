@@ -26,7 +26,10 @@ Three entry points share one front end (``_prepare``: tokenize, dedup,
 lexicon lookup) and one pruned block fetch (``_blocks``): the in-driver
 ``bm25_query_topk_local`` for point queries, the per-query
 ``bm25_query_topk`` and the per-doc-range ``bm25_query_topk_scan`` for
-batches. All three return identical ids and scores.
+batches. All three return identical ids and scores. A warm handle's
+driver copies (``Index.warm``) stand in for the lexicon scan on every
+path and for the block fetch on the local path; the batch paths always
+scan the pruned parquet, so each runs one plan, warm or cold.
 """
 
 from __future__ import annotations
@@ -274,7 +277,7 @@ def _blocks(
     """The batch's posting blocks: the term_bucket filter prunes
     partitions, the term filter is pushed into the parquet scan."""
     return (
-        index.postings_for(spark, batch.buckets)
+        index.postings(spark)
         .filter(
             F.col("term_bucket").isin(batch.buckets)
             & F.col("term").isin(batch.live_terms)
@@ -318,13 +321,12 @@ def bm25_query_topk_local(
 
     Where the blocks come from:
 
-    - a handle warmed with postings whose driver copy covers the query's
-      term_buckets (``Index.warm``) serves them from driver memory — zero
-      Spark jobs;
-    - otherwise (``warm(postings=False)``, a cold handle, a bucket-subset
-      warm that misses the query's buckets, or an index above the driver
-      copy's byte cap) the partition-pruned, term-filtered blocks are
-      collected from a scan — one fetch job, zero shuffles.
+    - a handle whose ``Index.warm`` filled the driver postings copy
+      serves them from driver memory — zero Spark jobs;
+    - otherwise (``warm(postings=False)``, a cold handle, or an index
+      above the driver copy's byte cap) the partition-pruned,
+      term-filtered blocks are collected from the parquet scan — one
+      fetch job, zero shuffles.
 
     Right for interactive point queries whose terms' posting volume is
     bounded (WAND needs block metadata + the blocks it actually decodes).
@@ -335,9 +337,8 @@ def bm25_query_topk_local(
     if batch is None:
         return _EMPTY.copy()
 
-    resident = index.driver_postings_for(batch.buckets)
-    if resident is not None:
-        blocks = resident.blocks(batch.live_terms)
+    if index._driver_postings is not None:
+        blocks = index._driver_postings.blocks(batch.live_terms)
     else:
         blocks = (
             _blocks(spark, index, batch, *_KERNEL_COLS)

@@ -13,7 +13,8 @@ supports appending new conversations to a live index:
   as the build's lexicon takes them — into the lexicon, and update
   corpus stats from exact long counters. Old posting blocks are never
   rewritten; ``compact_postings`` later folds boundary blocks back into
-  one row with the same reducer.
+  one row with the same reducer, and the docs segments the merges
+  appended into one.
 - ``stream_index(...)`` — wraps the merge in a Structured Streaming
   ``foreachBatch`` sink over a file/table source (use
   ``trigger(availableNow=True)`` for catch-up runs; checkpointing makes

@@ -18,3 +18,15 @@ def test_value_is_the_sum_of_top_level_steps():
     assert out["value_legacy"] == round(out["value"] + 6.0, 3)
     assert out["layers"] == layers
     assert not set(layers) & set(timings)
+
+
+def test_steal_rides_in_layers_not_value():
+    """The run's steal sits under ``layers``; neither ``value`` nor
+    ``value_legacy`` sums it."""
+    timings = {"index_build": 6.25, "wand_batch": 1.125}
+    stages = {"index_stage_docs": 2.5, "index_stage_postings": 2.75}
+    layers = {**stages, "steal_mean_vcpu": 0.5, "steal_peak_vcpu": 3.0}
+    out = headline(timings, layers)
+    assert out["value"] == 7.375
+    assert out["value_legacy"] == round(7.375 + 5.25, 3)
+    assert out["layers"] == layers

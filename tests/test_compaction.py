@@ -1,12 +1,14 @@
 """Postings compaction: answers bit-exact before == after == rebuild,
 one row per (term, block_id) after, file count shrinks, stale handles
-are epoch-poisoned, a crash mid-compaction changes nothing, and the
-compacted table is byte-identical to a rebuild over the merged docs."""
+are epoch-poisoned, a crash mid-compaction changes nothing, the
+compacted table is byte-identical to a rebuild over the merged docs, and
+the docs segments fold into one."""
 
 from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pytest
 
 from pyspark.sql import DataFrameWriter
@@ -88,16 +90,22 @@ def test_compaction_is_answer_invariant_and_merges_rows(spark, tmp_path):
 
 def test_epoch_chaos_warm_handle_through_compaction(spark, tmp_path):
     """Serving-handle lifecycle under compaction (VERDICT r4 #7): a WARMED
-    handle — including a bucket-subset warm — is poisoned when compaction
-    bumps the epoch, and ``refresh`` hands back a re-warmed handle at the
-    new epoch whose answers are bit-identical to pre-compaction."""
+    handle is poisoned when compaction bumps the epoch, and ``refresh``
+    hands back a handle re-warmed to the same level at the new epoch —
+    its driver postings copy holds the compacted rows — whose answers
+    are bit-identical to pre-compaction on the batch and local paths."""
+    from sparkrec.operators.scorer import bm25_query_topk_local
+
     root = str(tmp_path / "idx")
     build_index(spark, transcripts_df(spark, 40, conv_start=0), root, CFG)
     merge_index_delta(spark, transcripts_df(spark, 25, conv_start=40), root, CFG)
 
     before = _topk(spark, root)
+    local_before = bm25_query_topk_local(spark, Index.load(spark, root),
+                                         QUERIES, 20)
 
-    idx = Index.load(spark, root).warm(spark, postings=True, buckets=[0, 2])
+    idx = Index.load(spark, root).warm(spark, postings=True)
+    rows_pre = len(idx._driver_postings)
     # handle serves correctly before the chaos
     assert sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 12))
@@ -110,18 +118,18 @@ def test_epoch_chaos_warm_handle_through_compaction(spark, tmp_path):
         bm25_query_topk(spark, idx, QUERIES, 5)
 
     fresh = idx.refresh(spark)
-    try:
-        assert fresh.epoch > idx.epoch
-        # refresh re-warms to the same level, preserving the bucket subset
-        assert fresh._postings_cached is not None
-        assert fresh._postings_buckets == frozenset([0, 2])
-        assert sorted(
-            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 12))
-            for r in bm25_query_topk(spark, fresh, QUERIES, 20).collect()
-        ) == before
-    finally:
-        fresh._postings_cached.unpersist()
-        fresh._lexicon_cached.unpersist()
+    assert fresh.epoch > idx.epoch
+    # refresh re-warms to the same level: the copy holds the compacted rows
+    assert fresh._lexicon_map is not None
+    assert len(fresh._driver_postings) == fresh.postings(spark).count()
+    assert len(fresh._driver_postings) < rows_pre  # boundary blocks merged
+    assert sorted(
+        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 12))
+        for r in bm25_query_topk(spark, fresh, QUERIES, 20).collect()
+    ) == before
+    pd.testing.assert_frame_equal(
+        bm25_query_topk_local(spark, fresh, QUERIES, 20), local_before,
+        check_exact=True)
 
 
 def test_build_merge_compact_equals_rebuild_of_merged_docs(spark, tmp_path):
@@ -129,15 +137,12 @@ def test_build_merge_compact_equals_rebuild_of_merged_docs(spark, tmp_path):
     table: build_index(A) + merge_index_delta(B) + compact_postings is
     byte-identical — shard, term_bucket and the binary columns included —
     to build_index_from_docs over that index's own docs table (same
-    doc_ids), and so are its lexicon and stats."""
+    doc_ids), and so are its lexicon and stats. The compaction also folds
+    the build's and the merge's docs segments into one, rows unchanged."""
     root = str(tmp_path / "idx")
     ref = str(tmp_path / "ref")
     build_index(spark, transcripts_df(spark, 40, conv_start=0), root, CFG)
     merge_index_delta(spark, transcripts_df(spark, 25, conv_start=40), root, CFG)
-    out = compact_postings(spark, root)
-    assert out["rows_after"] < out["rows_before"]  # boundary blocks merged
-
-    build_index_from_docs(spark, read_table(spark, root, "docs"), ref, CFG)
 
     def snapshot(r, name):
         return sorted(
@@ -145,6 +150,15 @@ def test_build_merge_compact_equals_rebuild_of_merged_docs(spark, tmp_path):
                   for v in row)
             for row in read_table(spark, r, name).collect()
         )
+
+    docs_before = snapshot(root, "docs")
+    assert len(current(root).tables["docs"]["segments"]) == 2
+    out = compact_postings(spark, root)
+    assert out["rows_after"] < out["rows_before"]  # boundary blocks merged
+    assert len(current(root).tables["docs"]["segments"]) == 1
+    assert snapshot(root, "docs") == docs_before
+
+    build_index_from_docs(spark, read_table(spark, root, "docs"), ref, CFG)
 
     for name in ("postings", "lexicon", "stats"):
         got, want = snapshot(root, name), snapshot(ref, name)

@@ -89,3 +89,28 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert {"rank", "doc_id", "score"} <= set(df.columns)
+
+
+def test_stale_index_roots_of_other_fingerprints_pruned(tmp_path, monkeypatch):
+    """Building an entry index root deletes the roots of OTHER
+    fingerprints untouched for an hour; this fingerprint's roots, recent
+    roots of other fingerprints (a contract check of another commit may
+    still read them) and unrelated directories stay."""
+    monkeypatch.setattr(entrymod, "_ENTRY_IDX_BASE", str(tmp_path))
+    prefix, fp = entrymod._ENTRY_IDX_PREFIX, entrymod._IDX_FP
+    old = os.path.getmtime(tmp_path) - 2 * entrymod._STALE_ROOT_S
+    names = {
+        "stale": f"{prefix}0000000000_transcripts",
+        "recent": f"{prefix}1111111111_transcripts",
+        "own_old": f"{prefix}{fp}_transcripts",
+        "unrelated_old": "sparkrec_bench_sf0.01",
+    }
+    for key, name in names.items():
+        (tmp_path / name / "docs").mkdir(parents=True)
+        if key != "recent":
+            os.utime(tmp_path / name, (old, old))
+
+    entrymod._prune_stale_index_roots()
+
+    left = set(os.listdir(tmp_path))
+    assert left == {names["recent"], names["own_old"], names["unrelated_old"]}

@@ -153,7 +153,7 @@ def test_local_scoring_matches_distributed(spark, index, queries_pdf):
 
 
 def test_warm_scoring_matches_cold(spark, index, queries_pdf):
-    """warm() pins the serving tables in memory without changing a
+    """warm() fills the handle's driver copies without changing a
     single answer: identical ids AND scores before and after."""
     queries = list(zip(queries_pdf["query_id"], queries_pdf["query_text"]))[:8]
     k = 10
@@ -265,70 +265,6 @@ def test_scan_path_matches_group_path(spark, index, queries_pdf):
     assert "q-absent" not in got_m
 
 
-def test_bucket_subset_warm_covers_and_falls_back(spark, index_root, queries_pdf):
-    """warm(buckets=[...]) pins only the hot term_buckets; queries whose
-    terms live inside the warm set serve from the cache, anything else
-    falls back to the pruned cold scan — results identical either way
-    (VERDICT r4 #4 done-condition: warm a subset, query a term in an
-    unwarmed bucket, identical results)."""
-    from sparkrec.operators.scorer import bm25_query_topk_local
-
-    cold = Index.load(spark, index_root)
-    lex = {
-        r["term"]: r["term_bucket"]
-        for r in cold.lexicon(spark).collect()
-    }
-    all_buckets = sorted(set(lex.values()))
-    assert len(all_buckets) >= 2, "fixture must span multiple term_buckets"
-    excl = all_buckets[0]
-    warm_set = all_buckets[1:]
-    t_out = min(t for t, b in lex.items() if b == excl)
-    t_in = min(t for t, b in lex.items() if b == warm_set[0])
-    queries = [
-        ("q_in", t_in),                    # fully inside the warm set
-        ("q_out", t_out),                  # entirely in the unwarmed bucket
-        ("q_mix", f"{t_in} {t_out}"),      # spans both → must fall back
-    ]
-
-    def keyed(rows):
-        return {
-            (r["query_id"], r["rank"]): (r["doc_id"], round(r["score"], 12))
-            for r in rows
-        }
-
-    baseline = keyed(bm25_query_topk(spark, cold, queries, 10).collect())
-
-    idx = Index.load(spark, index_root).warm(
-        spark, postings=True, buckets=warm_set
-    )
-    try:
-        # the cache really is the subset — bucket `excl` absent from it
-        assert (
-            idx._postings_cached.filter(F.col("term_bucket") == excl).count()
-            == 0
-        )
-        # source selection: cache iff the warm set covers the request
-        assert idx.postings_for(spark, [warm_set[0]]) is idx._postings_cached
-        assert idx.postings_for(spark, [excl]) is not idx._postings_cached
-        assert (
-            idx.postings_for(spark, [excl, warm_set[0]])
-            is not idx._postings_cached
-        )
-        # plain postings() must never serve the subset cache
-        assert idx.postings(spark).count() == cold.postings(spark).count()
-
-        assert keyed(bm25_query_topk(spark, idx, queries, 10).collect()) == baseline
-        local = bm25_query_topk_local(spark, idx, queries, 10)
-        got = {
-            (r.query_id, int(r.rank)): (int(r.doc_id), round(float(r.score), 12))
-            for r in local.itertuples()
-        }
-        assert got == baseline
-    finally:
-        idx._postings_cached.unpersist()
-        idx._lexicon_cached.unpersist()
-
-
 def test_distributed_lexicon_fallback(spark, index_root, queries_pdf, monkeypatch):
     """Above LEX_DRIVER_CACHE_MAX the driver-resident lexicon map is not
     built and _lex_lookup falls back to a term-filtered distributed scan;
@@ -354,33 +290,27 @@ def test_distributed_lexicon_fallback(spark, index_root, queries_pdf, monkeypatc
         }
 
     want = keyed(bm25_query_topk(spark, warm_map, queries, 10).collect())
-    warm_map._lexicon_cached.unpersist()
 
     monkeypatch.setattr(Index, "LEX_DRIVER_CACHE_MAX", 0)
     idx = Index.load(spark, index_root).warm(spark, postings=False)
-    try:
-        assert idx._lexicon_map is None  # the fallback is really exercised
-        some_terms = ["term0001", "term0007"]
-        idf_map, buckets = _lex_lookup(spark, idx, some_terms)
-        assert set(idf_map) <= set(some_terms) and buckets
+    assert idx._lexicon_map is None  # the fallback is really exercised
+    some_terms = ["term0001", "term0007"]
+    idf_map, buckets = _lex_lookup(spark, idx, some_terms)
+    assert set(idf_map) <= set(some_terms) and buckets
 
-        assert keyed(bm25_query_topk(spark, idx, queries, 10).collect()) == want
-        local = bm25_query_topk_local(spark, idx, queries, 10)
-        got = {
-            (r.query_id, int(r.rank)): (int(r.doc_id), round(float(r.score), 12))
-            for r in local.itertuples()
-        }
-        assert got == want
-    finally:
-        idx._lexicon_cached.unpersist()
+    assert keyed(bm25_query_topk(spark, idx, queries, 10).collect()) == want
+    local = bm25_query_topk_local(spark, idx, queries, 10)
+    got = {
+        (r.query_id, int(r.rank)): (int(r.doc_id), round(float(r.score), 12))
+        for r in local.itertuples()
+    }
+    assert got == want
 
-    # pushdown evidence: the exact scan _lex_lookup issues on a COLD index
-    # carries the term In-filter into the parquet source. (Must run after
-    # the unpersist — while any lexicon cache is alive, Spark's cache
-    # manager substitutes InMemoryTableScan, which has no PushedFilters.)
-    base = Index.load(spark, index_root)
+    # pushdown evidence: the exact scan _lex_lookup issues on the warm
+    # handle above the cap carries the term In-filter into the parquet
+    # source
     p = plan(
-        base.lexicon(spark)
+        idx.lexicon(spark)
         .filter(F.col("term").isin(some_terms))
         .select("term", "idf", "term_bucket")
     )
@@ -607,7 +537,7 @@ def test_duplicate_query_ids_rejected_on_every_path(spark, index):
 
 
 def test_driver_postings_match_scan_path(spark, index_root, queries_pdf):
-    """warm() copies the warmed blocks into the driver; the local path
+    """warm() copies the committed blocks into the driver; the local path
     served from that copy returns exactly the answers of the pruned scan
     (a postings=False handle) — same rows, ids and bit-equal scores — and
     still enforces its block cap."""
@@ -616,25 +546,21 @@ def test_driver_postings_match_scan_path(spark, index_root, queries_pdf):
     queries = list(zip(queries_pdf["query_id"], queries_pdf["query_text"]))
     scan = Index.load(spark, index_root).warm(spark, postings=False)
     resident = Index.load(spark, index_root).warm(spark)
-    try:
-        assert scan._driver_postings is None
-        assert len(resident._driver_postings) == resident._postings_cached.count()
-        want = bm25_query_topk_local(spark, scan, queries, 10)
-        got = bm25_query_topk_local(spark, resident, queries, 10)
-        assert len(want) > 0
-        pd.testing.assert_frame_equal(got, want, check_exact=True)
-        with pytest.raises(ValueError, match="posting blocks"):
-            bm25_query_topk_local(spark, resident, queries, 10, max_blocks=1)
-    finally:
-        resident._postings_cached.unpersist()
-        resident._lexicon_cached.unpersist()
+    assert scan._driver_postings is None
+    assert len(resident._driver_postings) == resident.postings(spark).count()
+    want = bm25_query_topk_local(spark, scan, queries, 10)
+    got = bm25_query_topk_local(spark, resident, queries, 10)
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    with pytest.raises(ValueError, match="posting blocks"):
+        bm25_query_topk_local(spark, resident, queries, 10, max_blocks=1)
 
 
 def test_driver_postings_byte_cap_fallback(spark, index_root, queries_pdf,
                                            monkeypatch):
-    """At or above POST_DRIVER_CACHE_MAX_BYTES warm() pins the executor
-    cache but builds no driver copy, and the local path falls back to the
-    pruned scan with identical answers."""
+    """At or above POST_DRIVER_CACHE_MAX_BYTES warm() builds no driver
+    postings copy (the lexicon map still fills), and the local path falls
+    back to the pruned parquet scan with identical answers."""
     from sparkrec.operators.scorer import bm25_query_topk_local
 
     queries = list(zip(queries_pdf["query_id"], queries_pdf["query_text"]))[:6]
@@ -642,11 +568,7 @@ def test_driver_postings_byte_cap_fallback(spark, index_root, queries_pdf,
 
     monkeypatch.setattr(Index, "POST_DRIVER_CACHE_MAX_BYTES", 0)
     idx = Index.load(spark, index_root).warm(spark)
-    try:
-        assert idx._postings_cached is not None
-        assert idx._driver_postings is None  # the fallback is really exercised
-        got = bm25_query_topk_local(spark, idx, queries, 10)
-        pd.testing.assert_frame_equal(got, want, check_exact=True)
-    finally:
-        idx._postings_cached.unpersist()
-        idx._lexicon_cached.unpersist()
+    assert idx._lexicon_map is not None
+    assert idx._driver_postings is None  # the fallback is really exercised
+    got = bm25_query_topk_local(spark, idx, queries, 10)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)

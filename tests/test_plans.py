@@ -365,8 +365,12 @@ def _is_scan_fallback(jobs: list[list[str]]) -> bool:
 def test_point_query_local_path_runs_no_job_after_warm(spark, index):
     """After a full warm() the interactive path runs ZERO Spark jobs per
     query: idf + bucket come from the driver-resident lexicon map and the
-    posting blocks from the driver-resident postings copy."""
+    posting blocks from the driver-resident postings copy. The driver
+    copies are the handle's only resident state: warm() persists nothing
+    on executors."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     index.warm(spark)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     assert index._lexicon_map, "warm() must build the driver lexicon map"
     assert index._driver_postings is not None, "warm() must fill the copy"
     jobs = _point_query_jobs(spark, index, "term0001", "warm-probe")
@@ -374,31 +378,35 @@ def test_point_query_local_path_runs_no_job_after_warm(spark, index):
 
 
 def test_point_query_local_fallback_runs_single_scan(spark, index):
-    """Without a covering driver postings copy the point path is the
-    pruned scan — exactly one fetch job: on a handle warmed with
-    postings=False, and on a bucket-subset warm queried outside its
-    buckets (inside them it stays job-free)."""
+    """Without a driver postings copy (a handle warmed with
+    postings=False) the point path is the pruned scan — exactly one
+    fetch job."""
     lex_only = Index.load(spark, index.root).warm(spark, postings=False)
     assert lex_only._driver_postings is None
     jobs = _point_query_jobs(spark, lex_only, "term0001", "lex-only-probe")
     assert _is_scan_fallback(jobs), jobs
 
-    hot = lex_only._lexicon_map["term0001"][1]
-    others = [b for b in range(4) if b != hot]
-    t_in = (
-        lex_only.lexicon(spark)
-        .filter(F.col("term_bucket").isin(others))
-        .orderBy("term").first()["term"]
-    )
-    subset = Index.load(spark, index.root).warm(spark, buckets=others)
-    try:
-        assert subset._driver_postings is not None
-        jobs = _point_query_jobs(spark, subset, "term0001", "subset-miss")
-        assert _is_scan_fallback(jobs), jobs
-        jobs = _point_query_jobs(spark, subset, t_in, "subset-hit")
-        assert jobs == [], f"expected no job inside the subset, got {jobs}"
-    finally:
-        subset._postings_cached.unpersist()
+
+def _scan_filters(p: str) -> list[str]:
+    """The postings scan's partition and pushed filters, expression ids
+    dropped."""
+    return [re.sub(r"#\d+", "", m) for m in
+            re.findall(r"(?:PartitionFilters|PushedFilters): \[.*?\]", p)]
+
+
+def test_warm_handle_batch_plan_equals_cold(spark, index):
+    """A warm handle's batch path scans the same pruned parquet as a cold
+    handle's: the same term_bucket partition filter and the same pushed
+    term In-set, no in-memory relation."""
+    queries = [("q", "term0001 term0007")]
+    cold = plan(bm25_query_topk(spark, Index.load(spark, index.root), queries, 5))
+    warm = Index.load(spark, index.root).warm(spark)
+    hot = plan(bm25_query_topk(spark, warm, queries, 5))
+    filters = _scan_filters(cold)
+    assert any("term_bucket" in f for f in filters), cold
+    assert any("In(term" in f for f in filters), cold
+    assert _scan_filters(hot) == filters
+    assert "InMemoryTableScan" not in hot
 
 
 def test_delta_merge_and_compaction_reduce_on_term_shard(spark, tmp_path,

@@ -83,7 +83,7 @@ def test_merge_matches_full_rebuild(spark, tmp_path):
 
 def test_warm_handle_poisoned_by_merge(spark, tmp_path):
     """A handle warmed BEFORE a merge must fail loudly on its next query
-    (its pinned lexicon map, cached postings, and frozen n_docs/avgdl all
+    (its driver lexicon map and postings copy and frozen n_docs/avgdl all
     describe the pre-merge index — serving them would silently mis-score);
     ``refresh()`` hands over a re-warmed handle whose answers match a
     from-scratch rebuild over the union, ids AND scores."""
@@ -133,17 +133,15 @@ def test_refresh_refills_driver_postings_after_merge(spark, tmp_path):
 
     merge_index_delta(spark, transcripts_df(spark, 30, conv_start=40), root, CFG)
     fresh = idx.refresh(spark)
-    try:
-        assert idx._driver_postings is None
-        assert fresh._driver_postings is not None
-        assert len(fresh._driver_postings) > len(old)  # the delta's blocks
-        want = bm25_query_topk_local(spark, Index.load(spark, root), QUERIES, 10)
-        got = bm25_query_topk_local(spark, fresh, QUERIES, 10)
-        assert len(want) > 0
-        pd.testing.assert_frame_equal(got, want, check_exact=True)
-    finally:
-        fresh._postings_cached.unpersist()
-        fresh._lexicon_cached.unpersist()
+    assert idx._driver_postings is None
+    assert fresh._driver_postings is not None
+    # the copy holds exactly the new commit's rows: the delta's blocks too
+    assert len(fresh._driver_postings) == fresh.postings(spark).count()
+    assert len(fresh._driver_postings) > len(old)
+    want = bm25_query_topk_local(spark, Index.load(spark, root), QUERIES, 10)
+    got = bm25_query_topk_local(spark, fresh, QUERIES, 10)
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
 def test_merge_replay_skipped_and_partial_rejected(spark, tmp_path):

@@ -68,10 +68,11 @@ def main() -> None:
             "`scorer.bm25_query_topk_local` (same exact kernel, run on "
             "the driver): after `Index.warm` with postings its blocks "
             "come from the driver-resident postings copy with ZERO Spark "
-            "jobs; without a covering copy it collects the pruned scan "
+            "jobs; without that copy it collects this same pruned scan "
             "(one job, zero shuffles). The warm driver-resident lexicon "
             "map supplies idf+bucket lookups job-free on both paths "
-            "(indexer.Index.warm).",
+            "(indexer.Index.warm). Nothing is cached on executors, so a "
+            "warm handle's batch plan is this plan too.",
             plan(bm25_query_topk(spark, idx, [("q", "term0001 term0007")], 5)),
         ),
         (
