@@ -30,12 +30,18 @@ must reload (the same handoff as a merge).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 
 from sparkrec.operators.indexer import reduce_blocks
-from sparkrec.sources.tables import current, read_table, write_tables
+from sparkrec.sources.tables import current, write_tables
+
+
+def _layout(commit) -> tuple[int, int]:
+    """(postings data files, docs segments) the commit names; (0, 0)
+    under a catalog, which keeps no file list."""
+    if commit.tables is None:
+        return 0, 0
+    return len(commit.files("postings")), len(commit.tables["docs"]["segments"])
 
 
 def compact_postings(spark: SparkSession, index_root: str) -> dict:
@@ -44,35 +50,34 @@ def compact_postings(spark: SparkSession, index_root: str) -> dict:
     the same commit.
 
     Returns {files_before, files_after, rows_before, rows_after,
-    index_epoch}; the file and row counts are the postings table's. Safe
-    to run any time — answers are invariant; handles loaded before the
-    compaction fail ``check_fresh`` because their pinned segments are
-    gone.
+    docs_segments_before, docs_segments_after, index_epoch}; the file and
+    row counts are the postings table's, the files those of the commit's
+    own segments (``Commit.files``: a crashed write's leftovers on disk
+    are not counted). Safe to run any time — answers are invariant;
+    handles loaded before the compaction fail ``check_fresh`` because
+    their pinned segments are gone.
     """
-    def _count_files(p: str) -> int:
-        n = 0
-        for _, _, files in os.walk(p):
-            n += sum(f.endswith(".parquet") for f in files)
-        return n
-
-    path = os.path.join(index_root, "postings")
-    files_before = _count_files(path)
     commit = current(index_root)
+    files_before, docs_before = _layout(commit)
     post = commit.read(spark, "postings")
     rows_before = post.count()
 
     # every stored row is a partial of its block: the build/merge reducer
     # joins them, keeping each row's stored term_bucket
     writes = [("postings", reduce_blocks(post), ["term_bucket"], "overwrite")]
-    if commit.tables and len(commit.tables["docs"]["segments"]) > 1:
+    if docs_before > 1:
         writes.append(("docs", commit.read(spark, "docs"), None, "overwrite"))
     epoch = write_tables(index_root, writes)
-    rows_after = read_table(spark, index_root, "postings").count()
+    after = current(index_root)
+    rows_after = after.read(spark, "postings").count()
+    files_after, docs_after = _layout(after)
 
     return {
         "rows_before": rows_before,
         "rows_after": rows_after,
         "files_before": files_before,
-        "files_after": _count_files(path),
+        "files_after": files_after,
+        "docs_segments_before": docs_before,
+        "docs_segments_after": docs_after,
         "index_epoch": epoch,
     }

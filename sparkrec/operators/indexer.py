@@ -584,8 +584,9 @@ class Index:
     #: the perfbench serve index, 0.65 MB of blocks (5.2k rows) raised
     #: driver peak RSS by 3.9 MB — ~6× the encoded bytes, collect-time
     #: transients included — so the cap bounds a fill near 0.4 GB on
-    #: the 8g driver. Above it, warm point queries take the pruned
-    #: parquet scan — nothing breaks, one Spark job per query.
+    #: the 8g driver. Above it, warm point queries read their blocks
+    #: straight from the commit's files (``Commit.read_arrow``) — nothing
+    #: breaks, still no Spark job.
     POST_DRIVER_CACHE_MAX_BYTES = 64 << 20
 
     def check_fresh(self) -> None:
@@ -616,6 +617,29 @@ class Index:
     def postings(self, spark: SparkSession) -> DataFrame:
         return self._commit.read(spark, "postings")
 
+    def driver_blocks(self, terms, buckets, limit: int) -> pd.DataFrame | None:
+        """The posting blocks (``_DriverPostings.COLUMNS``) of ``terms``
+        with no Spark job: from the driver copy when ``warm`` filled it,
+        else read straight from the pinned commit's files — only the
+        ``buckets`` directories, at most ``limit`` rows
+        (``Commit.read_arrow``). None under a catalog, where only a Spark
+        scan reads the table.
+
+        The direct read checks freshness again once it is done (or has
+        failed): a commit deletes the segments it supersedes only after
+        publishing itself, so an unchanged generation proves every file
+        read was there. Without it, a compaction committed mid-query
+        would leave a listing with no files — an empty answer, no error.
+        """
+        if self._driver_postings is not None:
+            return self._driver_postings.blocks(terms)
+        try:
+            direct = self._commit.read_arrow(
+                "postings", _DriverPostings.COLUMNS, terms, buckets, limit)
+        finally:
+            self.check_fresh()
+        return None if direct is None else direct.to_pandas()
+
     def lexicon(self, spark: SparkSession) -> DataFrame:
         return self._commit.read(spark, "lexicon")
 
@@ -631,9 +655,11 @@ class Index:
         posting blocks are copied into the driver (``_DriverPostings``)
         when their encoded bytes, summed by one job, are below
         ``POST_DRIVER_CACHE_MAX_BYTES``; ``bm25_query_topk_local`` then
-        serves point queries with zero Spark jobs. Above the caps, and
-        on ``postings=False`` handles, the query paths scan the pruned
-        parquet (one job each). The copies are never filled on read;
+        serves point queries from memory. Above the postings cap, and on
+        ``postings=False`` handles, it reads the query's blocks straight
+        from the commit's files on the driver — no Spark job either —
+        while above the lexicon cap every path scans the pruned lexicon
+        (one job). The copies are never filled on read;
         they belong to this handle's epoch, and ``refresh`` refills them
         on the new handle."""
         lex = self.lexicon(spark)

@@ -28,8 +28,9 @@ lexicon lookup) and one pruned block fetch (``_blocks``): the in-driver
 ``bm25_query_topk`` and the per-doc-range ``bm25_query_topk_scan`` for
 batches. All three return identical ids and scores. A warm handle's
 driver copies (``Index.warm``) stand in for the lexicon scan on every
-path and for the block fetch on the local path; the batch paths always
-scan the pruned parquet, so each runs one plan, warm or cold.
+path and for the block fetch on the local path, which otherwise reads
+the pinned commit's files on the driver (``Index.driver_blocks``); the
+batch paths always scan the pruned parquet, one plan warm or cold.
 """
 
 from __future__ import annotations
@@ -319,32 +320,29 @@ def bm25_query_topk_local(
     DataFrame (query_id, rank, doc_id, score), identical values to
     ``bm25_query_topk``.
 
-    Where the blocks come from:
+    Where the blocks come from (``Index.driver_blocks``, then the scan):
 
-    - a handle whose ``Index.warm`` filled the driver postings copy
-      serves them from driver memory — zero Spark jobs;
-    - otherwise (``warm(postings=False)``, a cold handle, or an index
-      above the driver copy's byte cap) the partition-pruned,
-      term-filtered blocks are collected from the parquet scan — one
-      fetch job, zero shuffles.
+    1. the driver postings copy a full ``Index.warm`` filled;
+    2. else (``warm(postings=False)``, a cold handle, or an index over
+       the copy's byte cap) a direct Arrow read of the pinned commit's
+       files — the live terms' buckets, at most ``max_blocks + 1`` rows.
+       Neither runs a Spark job;
+    3. under an Iceberg catalog, the pruned Spark scan — one job.
 
     Right for interactive point queries whose terms' posting volume is
     bounded (WAND needs block metadata + the blocks it actually decodes).
-    Above ``max_blocks`` blocks this raises on either source, and the
+    Above ``max_blocks`` blocks this raises on every source, and the
     caller should use the distributed path.
     """
     batch = _prepare(spark, index, queries, min_token_len, remove_numeric)
     if batch is None:
         return _EMPTY.copy()
 
-    if index._driver_postings is not None:
-        blocks = index._driver_postings.blocks(batch.live_terms)
-    else:
-        blocks = (
-            _blocks(spark, index, batch, *_KERNEL_COLS)
-            .limit(max_blocks + 1)
-            .toPandas()
-        )
+    blocks = index.driver_blocks(batch.live_terms, batch.buckets,
+                                 max_blocks + 1)
+    if blocks is None:
+        blocks = (_blocks(spark, index, batch, *_KERNEL_COLS)
+                  .limit(max_blocks + 1).toPandas())
     if len(blocks) > max_blocks:
         raise ValueError(
             f"query touches > {max_blocks} posting blocks — use the "

@@ -29,6 +29,16 @@ segments, with the stored schema (no inference job), and its generation
 is the index epoch ``Index.check_fresh`` compares — a driver-side read
 of one small file. Under a catalog the generation stays 0 and the
 catalog's own snapshots isolate readers.
+
+A pinned commit can also be read with no Spark job at all:
+``Commit.read_arrow`` lists the files of only the commit's segments
+(``Commit.files``, descending only into the requested ``term_bucket``
+directories) and reads them with ``pyarrow.dataset`` on the driver. It
+never globs a table directory, so uncommitted segments of a write in
+progress, or of a crashed one, stay invisible to it as they do to the
+Spark scan. The point-query path reads its posting blocks this way
+(operators/scorer.py), and checks freshness after the read: a commit
+deletes superseded segments only after its ``os.replace``.
 """
 
 from __future__ import annotations
@@ -76,6 +86,45 @@ class Commit:
         paths = [os.path.join(base, seg) for seg in table["segments"]]
         return spark.read.schema(schema).option("basePath", base) \
             .parquet(*paths).drop("seg")
+
+    def files(self, name: str, buckets=None) -> list[str]:
+        """The data files of table ``name`` at this commit: those under
+        its segment directories only, and with ``buckets`` only under
+        those ``term_bucket=<b>`` directories. Names starting with ``_``
+        or ``.`` (markers, checksums) are skipped."""
+        dirs = [os.path.join(os.path.abspath(self.root), name, seg)
+                for seg in self.tables[name]["segments"]]
+        if buckets is not None:
+            dirs = [os.path.join(d, f"term_bucket={b}") for d in dirs for b in buckets]
+        out = []
+        for d in dirs:
+            for sub, subdirs, names in os.walk(d):
+                subdirs[:] = sorted(s for s in subdirs if not s.startswith(("_", ".")))
+                out += [os.path.join(sub, f) for f in sorted(names)
+                        if not f.startswith(("_", "."))]
+        return out
+
+    def read_arrow(self, name: str, columns, terms, buckets, limit: int):
+        """``columns`` of the rows of table ``name`` (partitioned by
+        ``term_bucket``) whose ``term`` is one of ``terms``, read from the
+        ``buckets`` directories of this commit's segments as a pyarrow
+        Table, on the driver with no Spark job; the scan stops once
+        ``limit`` rows matched. None under a catalog (read through
+        ``read`` there)."""
+        if self.tables is None:
+            return None
+        # imported on first use: pyarrow.dataset adds ~6 MB of driver RSS,
+        # which a process that never reads direct should not pay
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(StructType.fromJson(self.tables[name]["schema"]))
+        schema = pa.schema([f for f in schema if f.name != "term_bucket"])
+        dataset = ds.dataset(self.files(name, buckets), schema=schema,
+                             format="parquet")
+        return dataset.head(limit, columns=list(columns),
+                            filter=ds.field("term").isin(terms))
 
 
 def current(root: str) -> Commit:

@@ -23,8 +23,8 @@ from sparkrec.operators.indexer import (
     build_index,
     build_index_from_docs,
 )
-from sparkrec.operators.scorer import bm25_query_topk
-from sparkrec.sources.tables import current, read_table
+from sparkrec.operators.scorer import bm25_query_topk, bm25_query_topk_local
+from sparkrec.sources.tables import Commit, current, read_table
 from sparkrec.streaming.ingest import merge_index_delta
 
 CFG = IndexConfig(block_range=16, docs_per_shard=64, n_term_buckets=4)
@@ -94,8 +94,6 @@ def test_epoch_chaos_warm_handle_through_compaction(spark, tmp_path):
     hands back a handle re-warmed to the same level at the new epoch —
     its driver postings copy holds the compacted rows — whose answers
     are bit-identical to pre-compaction on the batch and local paths."""
-    from sparkrec.operators.scorer import bm25_query_topk_local
-
     root = str(tmp_path / "idx")
     build_index(spark, transcripts_df(spark, 40, conv_start=0), root, CFG)
     merge_index_delta(spark, transcripts_df(spark, 25, conv_start=40), root, CFG)
@@ -156,6 +154,9 @@ def test_build_merge_compact_equals_rebuild_of_merged_docs(spark, tmp_path):
     out = compact_postings(spark, root)
     assert out["rows_after"] < out["rows_before"]  # boundary blocks merged
     assert len(current(root).tables["docs"]["segments"]) == 1
+    # the return dict reports the fold, and counts the committed files
+    assert (out["docs_segments_before"], out["docs_segments_after"]) == (2, 1)
+    assert out["files_after"] == len(current(root).files("postings")) > 0
     assert snapshot(root, "docs") == docs_before
 
     build_index_from_docs(spark, read_table(spark, root, "docs"), ref, CFG)
@@ -164,6 +165,78 @@ def test_build_merge_compact_equals_rebuild_of_merged_docs(spark, tmp_path):
         got, want = snapshot(root, name), snapshot(ref, name)
         assert len(want) > 0, name
         assert got == want, name
+
+
+def _direct_reads(monkeypatch) -> list[bool]:
+    """Spy on ``Commit.read_arrow``: the returned list gets one entry per
+    call, True when it served a table (a direct read, no Spark job)."""
+    calls = []
+    read_arrow = Commit.read_arrow
+
+    def spy(self, *args, **kwargs):
+        out = read_arrow(self, *args, **kwargs)
+        calls.append(out is not None)
+        return out
+
+    monkeypatch.setattr(Commit, "read_arrow", spy)
+    return calls
+
+
+def test_point_sources_agree_built_merged_compacted(spark, tmp_path,
+                                                    monkeypatch):
+    """The local path's three block sources — the driver postings copy,
+    the direct Arrow read of the commit's files and the Spark scan — give
+    bit-equal ids and scores on one index as built, after a delta merge
+    (two postings segments, multi-row blocks) and after compaction."""
+    root = str(tmp_path / "idx")
+
+    def agree(n_segments):
+        assert len(current(root).tables["postings"]["segments"]) == n_segments
+        resident = bm25_query_topk_local(
+            spark, Index.load(spark, root).warm(spark), QUERIES, 20)
+        cold = Index.load(spark, root).warm(spark, postings=False)
+        direct_calls = _direct_reads(monkeypatch)
+        direct = bm25_query_topk_local(spark, cold, QUERIES, 20)
+        monkeypatch.setattr(Commit, "read_arrow", lambda self, *a, **kw: None)
+        scan = bm25_query_topk_local(spark, cold, QUERIES, 20)
+        monkeypatch.undo()
+        assert direct_calls == [True]
+        assert len(resident) > 0
+        pd.testing.assert_frame_equal(direct, resident, check_exact=True)
+        pd.testing.assert_frame_equal(scan, resident, check_exact=True)
+
+    build_index(spark, transcripts_df(spark, 40, conv_start=0), root, CFG)
+    agree(1)
+    merge_index_delta(spark, transcripts_df(spark, 25, conv_start=40), root, CFG)
+    agree(2)
+    compact_postings(spark, root)
+    agree(1)
+
+
+def test_compaction_committed_mid_direct_read_raises_stale(spark, tmp_path,
+                                                           monkeypatch):
+    """A compaction that commits after a cold handle's freshness check
+    but before its direct read deletes the segments the handle pins: the
+    read lists no files, so it must raise StaleIndexError rather than
+    answer from an empty table."""
+    from sparkrec.operators import scorer
+
+    root = str(tmp_path / "idx")
+    build_index(spark, transcripts_df(spark, 40, conv_start=0), root, CFG)
+    merge_index_delta(spark, transcripts_df(spark, 25, conv_start=40), root, CFG)
+    cold = Index.load(spark, root)
+    pinned = cold._commit.tables["postings"]["segments"]
+    lex_lookup = scorer._lex_lookup
+
+    def lookup_then_compact(*args):
+        out = lex_lookup(*args)
+        compact_postings(spark, root)
+        return out
+
+    monkeypatch.setattr(scorer, "_lex_lookup", lookup_then_compact)
+    with pytest.raises(StaleIndexError):
+        bm25_query_topk_local(spark, cold, QUERIES, 20)
+    assert not set(pinned) & set(os.listdir(os.path.join(root, "postings")))
 
 
 def _parquet_files(path):
@@ -182,6 +255,8 @@ def test_crash_mid_compaction_leaves_pre_compaction_index(spark, tmp_path,
     build_index(spark, transcripts_df(spark, 40, conv_start=0), root, CFG)
     merge_index_delta(spark, transcripts_df(spark, 25, conv_start=40), root, CFG)
     before, generation = _topk(spark, root), current(root).generation
+    local_before = bm25_query_topk_local(
+        spark, Index.load(spark, root).warm(spark), QUERIES, 20)
 
     parquet = DataFrameWriter.parquet
 
@@ -195,8 +270,24 @@ def test_crash_mid_compaction_leaves_pre_compaction_index(spark, tmp_path,
     monkeypatch.undo()
     assert current(root).generation == generation
     assert _topk(spark, root) == before
+    # the crashed rewrite's segment sits on disk, uncommitted: a cold
+    # handle's direct read lists only its commit's segments, so it
+    # answers bit-equal to the pre-compaction index
+    cold = Index.load(spark, root)
+    committed = cold._commit.tables["postings"]["segments"]
+    assert set(os.listdir(os.path.join(root, "postings"))) - set(committed)
+    direct = _direct_reads(monkeypatch)
+    pd.testing.assert_frame_equal(
+        bm25_query_topk_local(spark, cold, QUERIES, 20), local_before,
+        check_exact=True)
+    monkeypatch.undo()
+    assert direct and all(direct)
+    # and compaction counts the committed files only, not the leftover's
+    n_committed = len(cold._commit.files("postings"))
+    assert len(_parquet_files(os.path.join(root, "postings"))) > n_committed
 
-    compact_postings(spark, root)
+    out = compact_postings(spark, root)
+    assert out["files_before"] == n_committed
     assert _topk(spark, root) == before
     for name, table in current(root).tables.items():
         committed = sorted(

@@ -538,29 +538,31 @@ def test_duplicate_query_ids_rejected_on_every_path(spark, index):
 
 def test_driver_postings_match_scan_path(spark, index_root, queries_pdf):
     """warm() copies the committed blocks into the driver; the local path
-    served from that copy returns exactly the answers of the pruned scan
-    (a postings=False handle) — same rows, ids and bit-equal scores — and
-    still enforces its block cap."""
+    served from that copy returns exactly the answers of the direct read
+    of the commit's files (a postings=False handle) — same rows, ids and
+    bit-equal scores — and both sources enforce the block cap."""
     from sparkrec.operators.scorer import bm25_query_topk_local
 
     queries = list(zip(queries_pdf["query_id"], queries_pdf["query_text"]))
-    scan = Index.load(spark, index_root).warm(spark, postings=False)
+    direct = Index.load(spark, index_root).warm(spark, postings=False)
     resident = Index.load(spark, index_root).warm(spark)
-    assert scan._driver_postings is None
+    assert direct._driver_postings is None
     assert len(resident._driver_postings) == resident.postings(spark).count()
-    want = bm25_query_topk_local(spark, scan, queries, 10)
+    want = bm25_query_topk_local(spark, direct, queries, 10)
     got = bm25_query_topk_local(spark, resident, queries, 10)
     assert len(want) > 0
     pd.testing.assert_frame_equal(got, want, check_exact=True)
-    with pytest.raises(ValueError, match="posting blocks"):
-        bm25_query_topk_local(spark, resident, queries, 10, max_blocks=1)
+    for handle in (resident, direct):
+        with pytest.raises(ValueError, match="posting blocks"):
+            bm25_query_topk_local(spark, handle, queries, 10, max_blocks=1)
 
 
 def test_driver_postings_byte_cap_fallback(spark, index_root, queries_pdf,
                                            monkeypatch):
     """At or above POST_DRIVER_CACHE_MAX_BYTES warm() builds no driver
     postings copy (the lexicon map still fills), and the local path falls
-    back to the pruned parquet scan with identical answers."""
+    back to the direct read of the commit's files with identical
+    answers."""
     from sparkrec.operators.scorer import bm25_query_topk_local
 
     queries = list(zip(queries_pdf["query_id"], queries_pdf["query_text"]))[:6]

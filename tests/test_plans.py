@@ -377,12 +377,26 @@ def test_point_query_local_path_runs_no_job_after_warm(spark, index):
     assert jobs == [], f"expected no job on the warm local path, got {jobs}"
 
 
-def test_point_query_local_fallback_runs_single_scan(spark, index):
+def test_point_query_direct_read_runs_no_job(spark, index):
     """Without a driver postings copy (a handle warmed with
-    postings=False) the point path is the pruned scan — exactly one
-    fetch job."""
+    postings=False) the point path reads the pinned commit's postings
+    files straight from the driver (``Commit.read_arrow``) — ZERO Spark
+    jobs, like the warm path."""
     lex_only = Index.load(spark, index.root).warm(spark, postings=False)
     assert lex_only._driver_postings is None
+    jobs = _point_query_jobs(spark, lex_only, "term0001", "direct-probe")
+    assert jobs == [], f"expected no job on the direct read, got {jobs}"
+
+
+def test_point_query_local_fallback_runs_single_scan(spark, index,
+                                                     monkeypatch):
+    """Where no direct read is possible (an Iceberg catalog keeps no file
+    list: ``read_arrow`` returns None) the point path falls back to the
+    pruned Spark scan — exactly one fetch job."""
+    from sparkrec.sources.tables import Commit
+
+    monkeypatch.setattr(Commit, "read_arrow", lambda self, *a, **kw: None)
+    lex_only = Index.load(spark, index.root).warm(spark, postings=False)
     jobs = _point_query_jobs(spark, lex_only, "term0001", "lex-only-probe")
     assert _is_scan_fallback(jobs), jobs
 

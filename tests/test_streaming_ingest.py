@@ -20,6 +20,7 @@ from sparkrec.operators.indexer import (
     build_index,
 )
 from sparkrec.operators.scorer import bm25_query_topk, bm25_query_topk_local
+from sparkrec.sources.tables import Commit
 from sparkrec.streaming.ingest import merge_index_delta, stream_index
 
 CFG = IndexConfig(block_range=16, docs_per_shard=64, n_term_buckets=4)
@@ -216,24 +217,39 @@ def test_crash_mid_merge_leaves_pre_merge_index(spark, tmp_path, monkeypatch):
 
 
 def test_handle_loaded_mid_merge_answers_pre_merge(spark, tmp_path, monkeypatch):
-    """A handle loaded while a merge is writing — after each of its table
-    writes, before the commit — answers exactly like the pre-merge index
-    (ids and scores), and turns stale once the merge commits."""
+    """A cold handle loaded while a merge is writing — after each of its
+    table writes, before the commit — answers exactly like the pre-merge
+    index's driver copy (ids and scores) and turns stale once the merge
+    commits. Its blocks come from the direct read of its commit's files,
+    which never sees the merge's uncommitted postings segment on disk."""
     root = str(tmp_path / "idx")
     build_index(spark, transcripts_df(spark, 40, conv_start=0), root, CFG)
-    pre = bm25_query_topk_local(spark, Index.load(spark, root), QUERIES, 10)
+    pre = bm25_query_topk_local(spark, Index.load(spark, root).warm(spark),
+                                QUERIES, 10)
     assert len(pre) > 0
-    mid = {}
+    mid, uncommitted, direct = {}, {}, []
+    read_arrow = Commit.read_arrow
+
+    def spy(self, *args, **kwargs):
+        out = read_arrow(self, *args, **kwargs)
+        direct.append(out is not None)
+        return out
 
     def load_and_query(name):
         mid[name] = Index.load(spark, root)
+        committed = mid[name]._commit.tables["postings"]["segments"]
+        uncommitted[name] = (
+            set(os.listdir(os.path.join(root, "postings"))) - set(committed))
         got = bm25_query_topk_local(spark, mid[name], QUERIES, 10)
         pd.testing.assert_frame_equal(got, pre, check_exact=True)
 
+    monkeypatch.setattr(Commit, "read_arrow", spy)
     _after_write(monkeypatch, root, load_and_query)
     merge_index_delta(spark, transcripts_df(spark, 30, conv_start=40), root, CFG)
     monkeypatch.undo()
     assert set(mid) == set(MERGE_TABLES)
+    assert len(direct) == len(MERGE_TABLES) and all(direct)
+    assert uncommitted["postings"] and uncommitted["stats"]
     with pytest.raises(StaleIndexError, match="epoch"):
         bm25_query_topk_local(spark, mid["stats"], QUERIES, 10)
 

@@ -66,11 +66,14 @@ def main() -> None:
             "query. "
             "Interactive point queries are served by "
             "`scorer.bm25_query_topk_local` (same exact kernel, run on "
-            "the driver): after `Index.warm` with postings its blocks "
-            "come from the driver-resident postings copy with ZERO Spark "
-            "jobs; without that copy it collects this same pruned scan "
-            "(one job, zero shuffles). The warm driver-resident lexicon "
-            "map supplies idf+bucket lookups job-free on both paths "
+            "the driver) with ZERO Spark jobs for its blocks: after "
+            "`Index.warm` with postings they come from the driver-resident "
+            "postings copy; without that copy, from a driver-side Arrow "
+            "read of the pinned commit's files (`Commit.read_arrow`: the "
+            "same bucket pruning and term filter). Only under an Iceberg catalog does it collect "
+            "this pruned scan (one job, zero shuffles). The warm "
+            "driver-resident lexicon "
+            "map supplies idf+bucket lookups job-free on every path "
             "(indexer.Index.warm). Nothing is cached on executors, so a "
             "warm handle's batch plan is this plan too.",
             plan(bm25_query_topk(spark, idx, [("q", "term0001 term0007")], 5)),
